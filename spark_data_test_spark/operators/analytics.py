@@ -1410,11 +1410,10 @@ def market_basket(df, basket_col, item_col, min_support=1, k=None):
     bounded by BASKET size either way, not corpus size (the canonical
     co-occurrence discipline — a TPC-H order holds <= 7 items, a
     retail basket tens). Rows with a NULL basket or item key never
-    pair in the self-join form (an equi-join drops NULL keys and
-    ``item_a < item_b`` is never true under NULL), so the pair step
-    runs on the null-filtered slice — provably the same pairs — while
-    item counts and the basket total still aggregate over the FULL
-    distinct frame, exactly as before. With ``k`` the result is the
+    pair, exactly as in the self-join form (`bucket_pairs` drops NULL
+    bucket keys, and a NULL item never joins a pair), while item
+    counts and the basket total still aggregate over the FULL distinct
+    frame, exactly as before. With ``k`` the result is the
     deterministic global top-k by (support desc, item_a, item_b),
     planned as TakeOrderedAndProject — each partition keeps its own k
     rows and the driver merges — never a single-task sort over the
@@ -1426,7 +1425,7 @@ def market_basket(df, basket_col, item_col, min_support=1, k=None):
     ).distinct()
     pairs = (
         bucket_pairs(
-            items.where(F.col("_b").isNotNull() & F.col("_i").isNotNull()),
+            items,
             ("_b",),
             "_i",
             _BASKET_CAP,

@@ -3746,44 +3746,26 @@ def minhash_index_delete(spark, index_path, ids, id_col="doc_id"):
     """Library operator: REMOVE documents from the committed band
     index — the takedown event for the text-dedup index, mirroring
     `ivf_index_delete` for the ANN index. Commits one TOMBSTONE row
-    per distinct id (band = -1, no signature) as the next log delta;
-    probes resolve each doc against its newest tombstone, so a deleted
-    doc stops matching as a partner, a later `minhash_index_probe(
-    commit=True)` re-ingest resurrects it, and deleting an unknown id
-    is a harmless no-op. `minhash_index_compact` folds the log through
-    this live view, physically dropping tombstoned rows. ``ids`` is an
-    iterable of id values or a DataFrame whose ``id_col`` holds them.
-    Returns the committed delta version."""
-    from pyspark.sql import DataFrame
+    per distinct id (band = -1, no signature) as the next log delta
+    (the shared `index_log.commit_tombstones` writer); probes resolve
+    each doc against its newest tombstone, so a deleted doc stops
+    matching as a partner, a later `minhash_index_probe(commit=True)`
+    re-ingest resurrects it, and deleting an unknown id is a harmless
+    no-op. `minhash_index_compact` folds the log through this live
+    view, physically dropping tombstoned rows. ``ids`` is an iterable
+    of id values or a DataFrame whose ``id_col`` holds them. Returns
+    the committed delta version."""
+    from spark_data_test_spark.index_log import commit_tombstones
 
-    from spark_data_test_spark.state import (
-        RETAIN_ALL,
-        read_state_table,
-        write_state_version,
+    return commit_tombstones(
+        spark,
+        index_path,
+        ids,
+        id_col,
+        "doc_id",
+        (("band", _MH_TOMBSTONE_BAND), ("sig", None)),
+        "minhash_index_delete",
     )
-
-    base = read_state_table(spark, index_path)
-    if base is None:
-        raise ValueError(
-            f"minhash_index_delete: no committed index at {index_path}"
-            " (run minhash_index_build first)"
-        )
-    types = {f.name: f.dataType for f in base.schema.fields}
-    if isinstance(ids, DataFrame):
-        idf = ids.select(F.col(id_col).alias("doc_id")).distinct()
-    else:
-        ids = list(ids)
-        if not ids:
-            raise ValueError("minhash_index_delete: empty id set")
-        idf = spark.createDataFrame(
-            [(i,) for i in ids], ["doc_id"]
-        ).distinct()
-    tomb = idf.select(
-        F.col("doc_id").cast(types["doc_id"]),
-        F.lit(_MH_TOMBSTONE_BAND).cast(types["band"]).alias("band"),
-        F.lit(None).cast(types["sig"]).alias("sig"),
-    )
-    return write_state_version(tomb, index_path, retain=RETAIN_ALL)
 
 
 def minhash_index_compact(spark, index_path):
@@ -3793,21 +3775,17 @@ def minhash_index_compact(spark, index_path):
     union, which would freeze tombstones and the rows they superseded
     at ONE version and break the delete semantics (the same gotcha
     `ivf_index_compact` documents for the postings log). This
-    compactor applies the index's live view BEFORE committing, so the
-    folded snapshot holds exactly the band rows a probe would match;
-    later probe/commit deltas extend the log from this fresh base.
-    Returns the committed snapshot version, or None for a missing
-    index."""
-    from spark_data_test_spark.state import (
-        read_state_union,
-        write_state_version,
-    )
+    compactor applies the index's live view BEFORE committing
+    (`index_log.commit_view`), so the folded snapshot holds exactly
+    the band rows a probe would match; later probe/commit deltas
+    extend the log from this fresh base. Returns the committed
+    snapshot version, or None for a missing index."""
+    from spark_data_test_spark.index_log import commit_view
+    from spark_data_test_spark.state import read_state_union
 
     log = read_state_union(spark, index_path, version_col="_mv")
-    if log is None:
-        return None
-    return write_state_version(
-        _live_band_rows(log), index_path, retain=1
+    return commit_view(
+        None if log is None else _live_band_rows(log), index_path
     )
 
 

@@ -67,12 +67,19 @@ def prestage_media(spark, sf_dir):
     between passes, so the recorded lines measure the decode work
     itself. Query-side behavior is unchanged: each query still calls
     its stager, which no-ops on the fresh marker."""
-    import hashlib as _hashlib
+    _stage_png_files(spark, sf_dir, _media_root("png", sf_dir))
+    _stage_wav_files(spark, sf_dir, _media_root("wav", sf_dir))
+    _stage_y4m_files(spark, sf_dir, _media_root("y4m", sf_dir))
 
-    digest = _hashlib.md5(sf_dir.encode()).hexdigest()[:12]
-    _stage_png_files(spark, sf_dir, f"/tmp/spark_graft_png/{digest}")
-    _stage_wav_files(spark, sf_dir, f"/tmp/spark_graft_wav/{digest}")
-    _stage_y4m_files(spark, sf_dir, f"/tmp/spark_graft_y4m/{digest}")
+
+def _media_root(kind, sf_dir):
+    """Staging root of the planted ``kind`` corpus (``png``, ``wav``,
+    ``y4m``, ...) for ``sf_dir``: ``/tmp/spark_graft_{kind}/`` plus a
+    STABLE digest of the source path (``hash()`` is seed-randomized per
+    process). The one rule the stagers, the decode queries and
+    `prestage_media` all resolve through."""
+    digest = hashlib.md5(sf_dir.encode()).hexdigest()[:12]
+    return f"/tmp/spark_graft_{kind}/{digest}"
 
 
 try:  # pragma: no cover - PIL optional; stdlib PNG path always works
@@ -561,8 +568,7 @@ def multimodal_real_image_decode(spark, sf_dir):
     job, no shuffle. (`source_binaryfile_roundtrip` keeps the
     listing-based source covered for corpora that really do arrive
     unmanifested.)"""
-    digest = hashlib.md5(sf_dir.encode()).hexdigest()[:12]
-    root = f"/tmp/spark_graft_png/{digest}"
+    root = _media_root("png", sf_dir)
     _stage_png_files(spark, sf_dir, root)
 
     def extract(batches):
@@ -1215,8 +1221,7 @@ def audio_decoded(spark, sf_dir):
     decoded inside ``mapInPandas`` by the chunk-walking `decode_wav`.
     Memoized per (application, sf_dir): the features report and the
     fingerprint near-dup consume the identical frame."""
-    digest = hashlib.md5(sf_dir.encode()).hexdigest()[:12]
-    root = f"/tmp/spark_graft_wav/{digest}"
+    root = _media_root("wav", sf_dir)
     _stage_wav_files(spark, sf_dir, root)
 
     def extract(batches):
@@ -1661,8 +1666,7 @@ def video_decoded(spark, sf_dir):
     corpus read back through the manifest-driven scan and decoded
     inside ``mapInPandas`` by the marker-walking `decode_y4m`;
     memoized per (application, sf_dir)."""
-    digest = hashlib.md5(sf_dir.encode()).hexdigest()[:12]
-    root = f"/tmp/spark_graft_y4m/{digest}"
+    root = _media_root("y4m", sf_dir)
     _stage_y4m_files(spark, sf_dir, root)
 
     def extract(batches):

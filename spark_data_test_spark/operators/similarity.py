@@ -37,6 +37,13 @@ import os
 import pyspark.sql.functions as F
 from pyspark.sql import Window
 
+from spark_data_test_spark.index_log import (
+    IndexLog,
+    build_hash_expr,
+    dedup_ids,
+    model_build_hash,
+    release_pin,
+)
 from spark_data_test_spark.operators.relational import query, t
 from spark_data_test_spark.utils.spark_utils import FrameCache, local_df
 
@@ -1981,7 +1988,7 @@ def similarity_ivf_index_probe(spark, sf_dir):
     tombstone drops, cell-restricted exact rescoring — so a wrong
     merge rule, a missed tombstone, or drifted centroids breaks the
     hash. This also puts the round-15 hardening of exactly this code
-    path (up-front dup-id collapse, build stamps / `_stamp_guard`)
+    path (up-front dup-id collapse, build stamps / `index_log.stamp_guard`)
     under the driver's hash check each round. Scale shape: the
     committed index is probed, never rebuilt per batch — build
     O(corpus) assignment-only under an injected model, ingest
@@ -2538,7 +2545,124 @@ def semantic_prune(
 # index is the asset". Build trains + commits once; probes answer
 # query batches against the committed index without retraining, and
 # can append their own batch as an ingest delta (FAISS IVF-Flat add).
+# The versioned-log lifecycle every persisted vector index shares —
+# latest-wins resolve, tombstones, resolving compaction, build stamps,
+# pin release — lives in `spark_data_test_spark.index_log`; each family
+# below is an `IndexLog` spec plus its own scoring and batch checks.
 # ---------------------------------------------------------------------------
+
+
+def _bcast_cents(cents):
+    """The committed (cent_id, cv, cn2) centroids in the internal
+    (cent_id, _cv, _cn2) shape, broadcast (~sqrt(n) rows)."""
+    return F.broadcast(
+        cents.select(
+            "cent_id", F.col("cv").alias("_cv"), F.col("cn2").alias("_cn2")
+        )
+    )
+
+
+def _probed_cells(q, cents, nprobe):
+    """(query_id, cell): each batch row's ``nprobe`` best committed
+    cells by (cosine desc, cent_id)."""
+    wq = Window.partitionBy("_id").orderBy(F.col("_cos").desc(), "cent_id")
+    return (
+        _cell_scored(q, cents)
+        .withColumn("_rn", F.row_number().over(wq))
+        .where(F.col("_rn") <= int(nprobe))
+        .select(F.col("_id").alias("query_id"), F.col("cent_id").alias("cell"))
+    )
+
+
+def _assigned_cells(q, cents, *carry):
+    """(vec_id, cell, *carry): per batch id its argmax committed cell
+    (cosine desc, cent_id tie-break) and the ``_``-prefixed ``carry``
+    columns — the cell rule of every IVF ingest delta."""
+    return (
+        _cell_scored(q, cents)
+        .groupBy("_id")
+        .agg(
+            F.max_by(
+                "cent_id",
+                F.struct(
+                    F.col("_cos").alias("c"),
+                    (-F.col("cent_id")).alias("nc"),
+                ),
+            ).alias("cell"),
+            *[F.first(f"_{c}").alias(c) for c in carry],
+        )
+        .select(F.col("_id").alias("vec_id"), "cell", *carry)
+    )
+
+
+def _ivf_model_hash_dim(cents_raw):
+    """(content hash, vector dim) of the committed IVF centroids in
+    ONE model-sized aggregate — the build stamp every IVF-Flat path
+    checks/writes plus the dim the batch dim-lock compares against,
+    so neither costs a second driver action. Hash formula is
+    `build_hash_expr` exactly (see `model_build_hash`)."""
+    row = cents_raw.agg(
+        F.expr(build_hash_expr(["cent_id", "cv", "cn2"])).alias("h"),
+        F.max(F.size("cv")).alias("d"),
+    ).first()
+    # empty-model witness is the max(), not the hash: an empty frame
+    # still hashes the fixed (NULL, 0, NULL) aggregate triple to a
+    # non-NULL value (see model_build_hash) — keep that hash so the
+    # stamp side stays formula-faithful, and report dim 0
+    if row is None:
+        return 0, 0
+    h = 0 if row.h is None else int(row.h)
+    return h, (0 if row.d is None else int(row.d))
+
+
+def _validated_ivf_batch(q, cdim, op):
+    """Dim validation for every IVF-Flat batch (read probe,
+    probe-commit, and ingest alike, so the shared-delta contract
+    covers the error path too): first-row dim lock against the
+    COMMITTED centroid dim (``cdim``, precomputed on the model agg —
+    no extra action here beyond the one first()) — without it
+    `_cell_scored`'s zip_with NULL-pads a mismatched vector, max_by
+    assigns it an arbitrary cell, and unsound posting rows land in
+    the log with a success count. Raises on a wrong-dim batch (the
+    pq/ivfpq siblings' "not divisible" / "subvector dim" analogue);
+    rows deviating from the locked dim drop like `_pq_frame`'s ragged
+    rule. An empty frame (all zero-norm) passes through — the caller
+    decides the empty-batch contract."""
+    first = q.select(F.size("_v").alias("d")).first()
+    if first is None:
+        return q
+    dim = int(first.d)
+    if dim != int(cdim):
+        raise ValueError(
+            f"{op}: batch vector dim {dim} != committed centroid"
+            f" dim {int(cdim)}"
+        )
+    return q.where(F.size("_v") == dim)
+
+
+# The IVF-Flat postings log: one (vec_id, cell, v, n2) row per vector —
+# the inverted lists carry the vectors. Tombstones are cell = -1 rows
+# (real cells are nonnegative cent_ids). An ingest delta is, per
+# deduped batch id, the argmax committed cell plus the raw vector and
+# its norm; probes and ingest commit that ONE definition, so their
+# deltas are identical by construction.
+_IVF_POSTINGS = IndexLog(
+    family="ivf",
+    log="postings",
+    models=(("centroids", ("cent_id", "cv", "cn2")),),
+    models_noun="centroids",
+    payload=("cell", "v", "n2"),
+    guarded="v",
+    tomb=(("cell", -1), ("v", None), ("n2", None)),
+    live=lambda: F.col("cell") >= 0,
+    model_row=_ivf_model_hash_dim,
+    batch=lambda d, cdim, op, id_col, vec_col: _validated_ivf_batch(
+        _norm_vectors(d, id_col, vec_col, op), cdim, op
+    ),
+    rows=lambda q, models, *_: _assigned_cells(
+        q, _bcast_cents(models[0]), "v", "n2"
+    ),
+)
 
 
 def ivf_index_build(
@@ -2568,30 +2692,23 @@ def ivf_index_build(
     tests/test_similarity_api.py). Writes are the engine's crash-safe
     `write_state_version` commits (scratch write + atomic rename;
     readers never see a partial index). A SAME-PATH rebuild resets the
-    postings log (see the retention note below); its two commits are
-    not atomic TOGETHER, but the mismatch is DETECTED: every posting
-    row is stamped with the content hash of the centroids it was
-    assigned under (`_model_build_hash`), and probes verify the stamp
-    against the COMMITTED centroids — a rebuild that crashed between
-    its commits (or a probe racing one) fails loudly instead of
-    silently scoring old postings against new centroids. Pass
-    pre-trained ``centroids`` (``(cent_id, cv, cn2)``, as committed by
-    any build of this family) to skip training and index the full
-    corpus under the supplied model — the train-on-a-sample pattern,
-    matching `pq_index_build` / `ivfpq_index_build`; ``ncells`` /
-    ``rounds`` are ignored when centroids are supplied. Measured:
-    `BENCH_INDEX_PROBE_r16.json` records this path as
-    `ivf_flat_assign_only` (full x30 corpus under 1/30-sample-trained
-    centroids) against the full-corpus-Lloyd `ivf_flat` build — the
-    sample-trained build collapses to ~assignment cost, the 100 TB
-    build story measured rather than asserted. Returns the
-    number of indexed vectors (zero-norm vectors are dropped: cosine
-    is undefined for them, matching the whole ANN family). Corpus ids
-    are expected unique (the FAISS add-with-ids contract; dup-id
-    handling is specified only for probe/ingest BATCHES, which collapse
-    duplicates up front — `_pq_dedup_ids`)."""
-    from spark_data_test_spark.state import write_state_version
-
+    postings log; its two commits are not atomic TOGETHER, but the
+    mismatch is DETECTED: every posting row is stamped with the
+    content hash of the centroids it was assigned under, and probes
+    verify the stamp against the COMMITTED centroids — a rebuild that
+    crashed between its commits (or a probe racing one) fails loudly
+    instead of silently scoring old postings against new centroids
+    (`IndexLog.build` documents the pin -> stamp -> commit order).
+    Pass pre-trained ``centroids`` (``(cent_id, cv, cn2)``, as
+    committed by any build of this family) to skip training and index
+    the full corpus under the supplied model — the train-on-a-sample
+    pattern, matching `pq_index_build` / `ivfpq_index_build`;
+    ``ncells`` / ``rounds`` are ignored when centroids are supplied.
+    Returns the number of indexed vectors (zero-norm vectors are
+    dropped: cosine is undefined for them, matching the whole ANN
+    family). Corpus ids are expected unique (the FAISS add-with-ids
+    contract; dup-id handling is specified only for probe/ingest
+    BATCHES, which collapse duplicates up front — `dedup_ids`)."""
     c = _norm_vectors(corpus, id_col, vec_col, "ivf_index_build").persist()
     try:
         if centroids is None:
@@ -2604,152 +2721,42 @@ def ivf_index_build(
             )
         else:
             cent_table = centroids.select("cent_id", "cv", "cn2")
-        # pin the model with an eager localCheckpoint so it evaluates
-        # exactly ONCE: assignment, the build stamp, and the commit
-        # below all read the same pinned rows, so a nondeterministic
-        # injected centroid frame (sample(), limit()) can never leave
-        # postings assigned or stamped under a different evaluation
-        # than the model probes will read. Pinning (instead of
-        # commit-then-re-read, ADVICE r15) keeps BOTH commits at the
-        # END of the build: a mid-build failure of a same-path rebuild
-        # (OOM, bad input, interrupt) leaves the old index fully
-        # serving instead of new models over old stamped logs. The
-        # pinned blocks are model-sized (~sqrt(n) rows) and released
-        # explicitly after the final commit (ADVICE r16,
-        # `_release_pin`) on success AND failure paths; localCheckpoint
-        # is non-reliable storage, so losing an executor mid-build
-        # fails the build loudly — re-run it, the same crash posture
-        # as the non-atomic commits themselves.
-        pinned = cent_table.localCheckpoint(eager=True)
-        try:
-            bid = _model_build_hash(pinned, ["cent_id", "cv", "cn2"])
-            cents = F.broadcast(
-                pinned.select(
-                    "cent_id",
-                    F.col("cv").alias("_cv"),
-                    F.col("cn2").alias("_cn2"),
-                )
-            )
-            # round-18 fold assign: the same argmax winners as the old
-            # _cell_scored + max_by aggregate (identical cosine tree,
-            # identical (cos, -cent_id) comparator) with no n x ncells
-            # explosion and no corpus-sized exchange — each posting row
-            # keeps its own v/n2 in place instead of F.first over a
-            # shuffled group
-            assign = _argmax_cell_d(c, cents).select(
+        # round-18 fold assign: the same argmax winners as the old
+        # _cell_scored + max_by aggregate (identical cosine tree,
+        # identical (cos, -cent_id) comparator) with no n x ncells
+        # explosion and no corpus-sized exchange — each posting row
+        # keeps its own v/n2 in place instead of F.first over a
+        # shuffled group
+        return _IVF_POSTINGS.build(
+            index_path,
+            [(cent_table, False)],
+            lambda cents: _argmax_cell_d(c, _bcast_cents(cents)).select(
                 F.col("_id").alias("vec_id"),
                 F.col("_cell").alias("cell"),
                 F.col("_v").alias("v"),
                 F.col("_n2").alias("n2"),
-                F.lit(bid).alias("build_id"),
-                F.lit(_STAMP_FMT).cast("integer").alias("stamp_fmt"),
-            )
-            # both commits at the END, model first: centroids are a
-            # SNAPSHOT table (retrains replace it; retain=2 keeps the
-            # previous snapshot for time travel); postings are the BASE
-            # of a log table — committed with retain=1 so a REBUILD at
-            # an existing index_path RESETS the log (pruning every
-            # posting version of the previous index, whose cell ids are
-            # meaningless under the new centroids); the ingest deltas
-            # that `ivf_index_probe(commit=True)` appends afterwards
-            # use RETAIN_ALL so the log accumulates from this fresh
-            # base. A crash BETWEEN the two commits is detected (stamp
-            # mismatch, see `_model_build_hash`); a crash before either
-            # leaves the old index untouched and serving.
-            assign = assign.persist()
-            try:
-                n = assign.count()
-                os.makedirs(index_path, exist_ok=True)
-                write_state_version(
-                    pinned, f"{index_path}/centroids", retain=2
-                )
-                write_state_version(
-                    assign, f"{index_path}/postings", retain=1
-                )
-            finally:
-                assign.unpersist()
-            return n
-        finally:
-            _release_pin(pinned)
+            ),
+        )
     finally:
         c.unpersist()
-
-
-# Tombstone marker in the postings log: real cells are nonnegative
-# cent_ids, so a posting row with this cell is a committed DELETE
-# (`ivf_index_delete`). The latest-wins resolve keeps the newest row
-# per id as usual, THEN drops tombstone winners — a delete older than
-# a re-ingest is correctly superseded, and compaction (which commits
-# the resolved view) physically drops deleted ids from the log.
-_TOMBSTONE_CELL = -1
-
-# Build-stamp FORMULA version, persisted as `stamp_fmt` alongside
-# `build_id` on every stamped log row (ADVICE r16): probes can then
-# tell "committed under an older formula — rebuild to migrate" apart
-# from genuine crashed-rebuild corruption, and any future formula
-# change bumps this constant instead of hitting the same wall.
-# History: 1 = bare bit_xor of per-row xxhash64 (rounds <= 15, never
-# persisted — those logs carry no stamp_fmt column and resolve to
-# NULL); 2 = xxhash64(xor, count, masked sum) (round 16+, see
-# `_build_hash_expr`; the column itself lands in round 17, so a
-# NULL stamp_fmt means a round-16-or-earlier writer). Note (VERDICT
-# r17): NULL therefore covers TWO populations with different
-# outcomes — round-16 logs were stamped under the CURRENT formula 2
-# and verify cleanly, while <= r15 logs carry formula-1 stamps and
-# trip `_stamp_guard` with its predates-versioning diagnosis; both
-# behaviors are correct, the version column just cannot distinguish
-# the two retroactively.
-_STAMP_FMT = 2
-
-
-def _release_pin(df):
-    """Best-effort release of an eager ``localCheckpoint`` pin's blocks
-    (ADVICE r16): the checkpointed RDD is not in the cache manager, so
-    ``df.unpersist()`` cannot reach it and the blocks otherwise live
-    until the ContextCleaner garbage-collects the frame — many builds
-    in one long-lived session would accumulate pinned model-sized
-    blocks. The analyzed plan of a localCheckpoint IS the LogicalRDD
-    wrapping the checkpointed RDD; unpersist that RDD directly. Only
-    ever called AFTER the final commit reads the pin, and best-effort
-    by design: a Py4J surface change degrades back to the documented
-    GC backstop, never fails a build that already committed.
-
-    VERSION PIN (VERDICT r17): this reaches classic-mode Py4J
-    internals — ``_jdf.queryExecution().analyzed()`` and the
-    ``LogicalRDD`` class name — which are Spark 3.5/4.x-classic
-    surface, not public API; re-verify the pytest pin
-    (tests/test_pq_index_api.py) deliberately on any Spark version
-    bump. Under SPARK CONNECT there is no ``_jdf`` at all, so pin
-    release is structurally unavailable (the plan lives server-side);
-    that case is detected explicitly below and the server's
-    ContextCleaner remains the only reclaim path (ADVICE r17 — an
-    intentional no-op, not an exception-swallow)."""
-    if not hasattr(df, "_jdf"):
-        return  # Spark Connect frame: no Py4J plan handle exists
-    try:
-        plan = df._jdf.queryExecution().analyzed()
-        if plan.getClass().getName().endswith("LogicalRDD"):
-            plan.rdd().unpersist(False)
-    except Exception:
-        pass  # GC/ContextCleaner remains the backstop
 
 
 def release_model_pin(model):
     """Library operator: release the checkpoint blocks behind an
     eagerly-``localCheckpoint``ed frame this library handed out, once
     a long-lived session is done with it — the public counterpart of
-    the internal pin release the index builds perform (ADVICE r16),
-    at the same altitude as `release_comparison_result` for comparison
-    reports. ``df.unpersist()`` cannot reach a localCheckpoint's
-    blocks (they are not in the cache manager), so without this call
-    each pinned frame lives until the ContextCleaner collects it.
-    Covers BOTH caller-held pinned frames the library returns:
+    the internal pin release the index builds perform, at the same
+    altitude as `release_comparison_result` for comparison reports.
+    ``df.unpersist()`` cannot reach a localCheckpoint's blocks (they
+    are not in the cache manager), so without this call each pinned
+    frame lives until the ContextCleaner collects it. Covers BOTH
+    caller-held pinned frames the library returns:
 
     - `pq_train` models — the inject-a-pretrained-model pattern
       becomes: train once, pass the frame into any number of
       ``*_index_build(..., codebook=cb)`` calls, then
       ``release_model_pin(cb)``.
-    - ``*_index_probe(..., commit=True)`` results (ADVICE r17) — the
+    - ``*_index_probe(..., commit=True)`` results — the
       probe-then-commit path pins its answer so the commit can never
       re-evaluate it; that pin is CALLER-owned, so an ingest loop
       that keeps committing batches should release each result once
@@ -2763,228 +2770,8 @@ def release_model_pin(model):
     localCheckpoints; best-effort by design. LIMIT: under Spark
     Connect there is no client-side plan handle, so this is an
     intentional no-op and the server's ContextCleaner remains the
-    only reclaim path (see `_release_pin`)."""
-    _release_pin(model)
-
-
-def _model_build_hash(model, cols):
-    """Order-independent content hash of a small model frame —
-    ``xxhash64(xor, count, masked sum)`` over per-row xxhash64s of the
-    named columns, the exact aggregate `_build_hash_expr` defines —
-    the BUILD STAMP that makes a
-    crashed rebuild detectable: every build stamps this hash of the
-    model(s) it committed into the postings/codes rows it writes, and
-    every probe recomputes the hash from the COMMITTED model(s) and
-    verifies each resolved live row matches. A crash between a
-    rebuild's model commit and its log commit (either order) leaves
-    rows stamped with a DIFFERENT build than the committed model hashes
-    to, so the next probe fails loudly instead of silently scoring
-    stale codes against the wrong model. The hash identifies model
-    CONTENT, not the build event: an identical retrain re-stamps
-    identically, which is exactly right — its codes are valid. One
-    model-sized aggregate, no corpus touch.
-
-    A bare bit_xor is multiplicity-blind (pairs of identical rows
-    cancel to 0, so a doubled table would hash like an empty one and
-    an empty model would stamp as 0) — ADVICE r15. The stamp therefore
-    folds the row COUNT and a masked per-row hash SUM in alongside the
-    xor: duplicate-row corruption changes count and sum even when the
-    xor cancels, and an empty model hashes the (NULL, 0, NULL)
-    aggregate triple — a fixed value distinct from any row's. The sum
-    masks each row hash to 31 non-negative bits so the exact long sum
-    cannot reach ANSI overflow until ~2^32 rows — far past any model
-    size. NOTE: this formula replaced a bare bit_xor in round 16;
-    indexes committed under the old formula fail their next probe's
-    stamp check and need one rebuild (`_stamp_guard` says so). Since
-    round 17 every stamped row also persists the formula VERSION
-    (`_STAMP_FMT` as ``stamp_fmt``), so the guard diagnoses a future
-    formula change as a migration instead of corruption."""
-    row = model.agg(F.expr(_build_hash_expr(cols)).alias("h")).first()
-    return 0 if row is None or row.h is None else int(row.h)
-
-
-def _build_hash_expr(cols):
-    """The build-stamp aggregate as a SQL expression string, so probes
-    that fold the expected stamp into an EXISTING model agg (no extra
-    action) evaluate the exact formula `_model_build_hash` stamps with
-    — one definition, no drift between the stamping and checking
-    sides."""
-    rh = f"xxhash64({', '.join(cols)})"
-    return f"xxhash64(bit_xor({rh}), count(*), sum({rh} & 2147483647))"
-
-
-def _pq_codebook_row(codebook):
-    """Shape + content summary of a committed PQ codebook in ONE
-    model-sized aggregate — ``m1`` (max subspace index), ``subdim``,
-    and ``bid`` (the content hash, `_build_hash_expr` exactly).
-    Shared by every codes-based probe/ingest call site so the
-    stamp-parity contract between a probe and its ingest sibling
-    cannot drift one copy at a time."""
-    return codebook.agg(
-        F.max("s").alias("m1"),
-        F.max(F.size("csub")).alias("subdim"),
-        F.expr(_build_hash_expr(["s", "cent_id", "csub"])).alias("bid"),
-    ).first()
-
-
-def _stamp_guard(frame, payload_col, expected, op, live):
-    """Scan-side build-stamp check (the `assert_true` idiom — no extra
-    action): rewrites ``payload_col`` so any resolved LIVE row whose
-    ``build_id`` differs from the committed model's content hash raises
-    during the probe's own scan. NULL stamps on live rows also trip
-    (eqNullSafe): live rows are always stamped by their writer. The
-    ``live`` predicate is part of the guard CONDITION, not just an
-    upstream filter, because the optimizer may elide a redundant
-    tombstone filter (e.g. under a posexplode, which drops NULL arrays
-    by itself) and the guard must never fire on a tombstone winner's
-    NULL stamp.
-
-    The error is DIAGNOSED via the persisted ``stamp_fmt`` column
-    (ADVICE r16): a live row carrying a known-but-different formula
-    version raises the migration message ("old formula — rebuild, not
-    corruption"); a same-version or NULL-version mismatch raises the
-    crashed-rebuild message (NULL means the row predates stamp-format
-    versioning — round 16 and earlier — where the two cases are
-    genuinely indistinguishable)."""
-    mismatch = live & ~F.col("build_id").eqNullSafe(F.lit(int(expected)))
-    foreign_fmt = F.col("stamp_fmt").isNotNull() & (
-        F.col("stamp_fmt") != F.lit(_STAMP_FMT)
-    )
-    msg = F.when(
-        foreign_fmt,
-        F.concat(
-            F.lit(f"{op}: log rows are stamped under stamp-format "),
-            F.col("stamp_fmt").cast("string"),
-            F.lit(
-                f" but this release checks format {_STAMP_FMT} — an"
-                " older/newer formula, NOT corruption; re-run the"
-                " build at this index path to migrate the stamps"
-            ),
-        ),
-    ).otherwise(
-        F.lit(
-            f"{op}: committed model and log rows carry different"
-            " build stamps — a rebuild crashed between its commits,"
-            " or (NULL stamp_fmt) the log predates build stamping /"
-            " stamp-format versioning (pre-r16 logs used the"
-            " bare-bit_xor formula; r16 logs carry no format column);"
-            " re-run the build at this index path"
-        )
-    )
-    return frame.withColumn(
-        payload_col,
-        F.when(mismatch, F.assert_true(F.lit(False), msg)).otherwise(
-            F.col(payload_col)
-        ),
-    )
-
-
-def _assert_log_stamp(spark, log_path, expected, op, live):
-    """Crashed-rebuild gate for every LOG-APPENDING path at O(newest
-    live row), not O(index): walk the log's committed versions NEWEST
-    FIRST and verify the first live row found carries the committed
-    model's content hash. The probe paths additionally verify the
-    live rows their ANSWER resolves scan-side (`_stamp_guard`), but
-    that alone cannot gate a commit: a cell-pruned (or empty) answer
-    may evaluate no pre-existing row at all, and one commit landing
-    on a crashed-rebuild log would stamp a NEW-model delta on top of
-    an all-old-stamped log — permanently blinding this gate's
-    newest-live-row witness for every later append. So BOTH commit
-    paths (probe ``commit=True`` and the ingest-only entries) run
-    this gate before appending; a pure ingest pays nothing else. A
-    crashed rebuild (model snapshot advanced, log not reset) leaves
-    the ENTIRE existing log stamped under the old model, so the
-    newest live row alone witnesses it. Without this gate an ingest
-    loop would keep "successfully" appending batches (stamped under
-    the NEW model) onto a log every probe rejects, and the diagnosed
-    repair — a same-path rebuild, which resets the log — would then
-    silently discard them. ``live`` maps a version frame to its
-    non-tombstone predicate (tombstones deliberately carry NULL
-    stamps and prove nothing about the log's model). Cost shape: on
-    an ingest cadence the newest version IS the previous batch delta,
-    so this reads one batch-sized file; tombstone-only deltas step
-    back one version; a fresh post-build log reads the base version's
-    first live row (pushed single-column read). A log with no live
-    row anywhere cannot contradict the model — appending is safe."""
-    from spark_data_test_spark.state import _committed_state_version
-
-    cur = _committed_state_version(log_path)
-    if cur is None:
-        return
-    for v in range(int(cur), -1, -1):
-        if not os.path.exists(f"{log_path}/v{v}/_SUCCESS"):
-            continue
-        part = spark.read.parquet(f"{log_path}/v{v}")
-        if "build_id" not in part.columns:
-            # pre-stamping release wrote this version: its live rows
-            # resolve with NULL stamps, which every probe rejects
-            part = part.withColumn("build_id", F.lit(None).cast("long"))
-        row = part.where(live(part)).select("build_id").first()
-        if row is None:
-            continue  # tombstone-only delta: step back one version
-        if row.build_id is None or int(row.build_id) != int(expected):
-            raise ValueError(
-                f"{op}: the committed model and the newest live log"
-                " rows carry different build stamps — a rebuild"
-                " crashed between its commits, or the log predates"
-                " build stamping; re-run the build at this index path"
-                " before appending (appending now would stamp new rows"
-                " under a model the existing log was not built"
-                " against, and the rebuild that repairs the index"
-                " would discard them)"
-            )
-        return
-
-
-def _resolved_postings(spark, index_path, expect_build=None):
-    """LATEST-WINS view of the postings log: a re-ingested id may
-    appear in several deltas — possibly with a CHANGED vector in a
-    DIFFERENT cell — so each read resolves per vec_id on the commit
-    version (max_by): deterministic, and an id can never occupy two
-    ranks. Tombstone rows (`ivf_index_delete`) participate in the
-    resolve and are filtered AFTER it, so the newest commit decides
-    whether an id is live. Same shuffle cost as a plain
-    dropDuplicates over the log; `ivf_index_compact` keeps the log
-    short. Returns None for a missing/empty log."""
-    from spark_data_test_spark.state import read_state_union
-
-    log = read_state_union(
-        spark,
-        f"{index_path}/postings",
-        version_col="_pv",
-        allow_missing_columns=True,
-    )
-    if log is None:
-        return None
-    if "build_id" not in log.columns:
-        # a log committed entirely by a pre-stamping release: resolve
-        # with NULL stamps (the probe guard reads them as stale and
-        # directs the operator to rebuild)
-        log = log.withColumn("build_id", F.lit(None).cast("long"))
-    if "stamp_fmt" not in log.columns:
-        # pre-format-versioning log (round <= 16): NULL format, so the
-        # guard's migration diagnosis stays honest about the ambiguity
-        log = log.withColumn("stamp_fmt", F.lit(None).cast("integer"))
-    out = (
-        log.groupBy("vec_id")
-        .agg(
-            F.max_by(
-                F.struct("cell", "v", "n2", "build_id", "stamp_fmt"),
-                F.col("_pv"),
-            ).alias("_p")
-        )
-        .select(
-            "vec_id", "_p.cell", "_p.v", "_p.n2", "_p.build_id",
-            "_p.stamp_fmt",
-        )
-        .where(F.col("cell") >= 0)
-    )
-    if expect_build is not None:
-        out = _stamp_guard(
-            out, "v", expect_build, "ivf_index_probe",
-            live=F.col("cell") >= 0,
-        )
-    return out
+    only reclaim path (see `index_log.release_pin`)."""
+    release_pin(model)
 
 
 def ivf_index_compact(spark, index_path):
@@ -2998,14 +2785,7 @@ def ivf_index_compact(spark, index_path):
     indexed vector; later `ivf_index_probe(commit=True)` deltas extend
     the log from this fresh base. Returns the committed snapshot
     version, or None for a missing index."""
-    from spark_data_test_spark.state import write_state_version
-
-    resolved = _resolved_postings(spark, index_path)
-    if resolved is None:
-        return None
-    return write_state_version(
-        resolved, f"{index_path}/postings", retain=1
-    )
+    return _IVF_POSTINGS.compact(spark, index_path)
 
 
 def ivf_index_delete(spark, index_path, ids, id_col="vec_id"):
@@ -3025,49 +2805,7 @@ def ivf_index_delete(spark, index_path, ids, id_col="vec_id"):
 
     ``ids`` is either an iterable of id values or a DataFrame whose
     ``id_col`` holds them. Returns the committed delta version."""
-    from pyspark.sql import DataFrame
-
-    from spark_data_test_spark.state import (
-        RETAIN_ALL,
-        read_state_table,
-        write_state_version,
-    )
-
-    base = read_state_table(spark, f"{index_path}/postings")
-    if base is None:
-        raise ValueError(
-            f"ivf_index_delete: no committed postings at {index_path}"
-            " (run ivf_index_build first)"
-        )
-    types = {f.name: f.dataType for f in base.schema.fields}
-    if "build_id" not in types:
-        raise ValueError(
-            f"ivf_index_delete: the log at {index_path} predates build"
-            f" stamping (committed by an earlier release) — re-run"
-            f" ivf_index_build to upgrade it before deleting"
-        )
-    if isinstance(ids, DataFrame):
-        idf = ids.select(F.col(id_col).alias("vec_id")).distinct()
-    else:
-        ids = list(ids)
-        if not ids:
-            raise ValueError("ivf_index_delete: empty id set")
-        idf = spark.createDataFrame(
-            [(i,) for i in ids], ["vec_id"]
-        ).distinct()
-    tomb = idf.select(
-        F.col("vec_id").cast(types["vec_id"]),
-        F.lit(_TOMBSTONE_CELL).cast(types["cell"]).alias("cell"),
-        F.lit(None).cast(types["v"]).alias("v"),
-        F.lit(None).cast(types["n2"]).alias("n2"),
-        # tombstones carry no stamp (and no stamp format): they never
-        # survive resolution, so the probe-side check never sees them
-        F.lit(None).cast(types["build_id"]).alias("build_id"),
-        F.lit(None).cast("integer").alias("stamp_fmt"),
-    )
-    return write_state_version(
-        tomb, f"{index_path}/postings", retain=RETAIN_ALL
-    )
+    return _IVF_POSTINGS.delete(spark, index_path, ids, id_col)
 
 
 def ivf_index_probe(
@@ -3113,69 +2851,31 @@ def ivf_index_probe(
     RESETS the postings log, so no stale cell ids survive a retrain).
     The ``commit=True`` result is an eager ``localCheckpoint`` whose
     pin is CALLER-owned — release it with `release_model_pin` once
-    read (ADVICE r17); a pure-ingest workload should call
-    `ivf_index_ingest` instead (identical delta, no probe work, no
-    pinned frame)."""
-    from spark_data_test_spark.state import (
-        read_state_table,
-        write_state_version,
-    )
-
+    read; a pure-ingest workload should call `ivf_index_ingest`
+    instead (identical delta, no probe work, no pinned frame)."""
+    op = "ivf_index_probe"
     spark = queries.sparkSession
-    cents_raw = read_state_table(spark, f"{index_path}/centroids")
-    if cents_raw is None:
-        raise ValueError(
-            f"ivf_index_probe: no committed index at {index_path}"
-            " (run ivf_index_build first)"
-        )
-    cents = F.broadcast(
-        cents_raw.select(
-            "cent_id", F.col("cv").alias("_cv"), F.col("cn2").alias("_cn2")
-        )
+    # the resolved live postings carry the scan-side build-stamp check
+    # against the committed centroids' content hash; the centroid dim
+    # for the batch dim-lock rides the same model-sized agg
+    (cents_raw,), expected, cdim, postings = _IVF_POSTINGS.open(
+        spark, index_path, op
     )
-    # build-stamp check: resolved live postings must be stamped with
-    # the COMMITTED centroids' content hash (crashed-rebuild
-    # detector); the centroid dim for the batch dim-lock rides the
-    # same model-sized agg — no extra action
-    expected, cdim = _ivf_model_hash_dim(cents_raw)
-    postings = _resolved_postings(
-        spark, index_path, expect_build=expected
-    )
-    if postings is None:
-        # centroids committed but no postings: a build that crashed
-        # between its two commits — surface it, don't join against None
-        raise ValueError(
-            f"ivf_index_probe: index at {index_path} has centroids but "
-            "no committed postings (re-run ivf_index_build)"
-        )
+    cents = _bcast_cents(cents_raw)
     # collapse duplicate batch ids up front (greatest (norm, vector)
     # pair), the family rule shared with pq_index_probe / ivfpq_index_probe: a dup
     # id would interleave both vectors' candidates in ONE rank window,
     # producing duplicate neighbor_ids and corrupt ranks
-    queries = _pq_dedup_ids(queries, id_col, vec_col)
-    qn = _norm_vectors(queries, id_col, vec_col, "ivf_index_probe")
+    queries = dedup_ids(queries, id_col, vec_col)
     # persist BEFORE the validation first() so the dim-lock action
     # seeds the same cache every later scan reads — not a second
     # execution of the dedup shuffle
-    qn = qn.persist()
+    qn = _norm_vectors(queries, id_col, vec_col, op).persist()
     try:
-        # read AND commit paths validate (the pq family's posture): a
-        # mis-dim query NULL-pads the zip_with scoring, so without the
-        # check a read probe returns NULL-cosine rows and a commit
-        # lands unsound posting rows in the log with a success count
-        q = _validated_ivf_batch(qn, cdim, "ivf_index_probe")
-        wq = Window.partitionBy("_id").orderBy(
-            F.col("_cos").desc(), "cent_id"
-        )
-        probes = (
-            _cell_scored(q, cents)
-            .withColumn("_rn", F.row_number().over(wq))
-            .where(F.col("_rn") <= int(nprobe))
-            .select(
-                F.col("_id").alias("query_id"),
-                F.col("cent_id").alias("cell"),
-            )
-        )
+        # read AND commit paths validate: a mis-dim query NULL-pads the
+        # zip_with scoring, so without the check a read probe returns
+        # NULL-cosine rows and a commit lands unsound posting rows
+        q = _validated_ivf_batch(qn, cdim, op)
         # posting lists join on cell; the query side joins WITHOUT a
         # broadcast hint (batches can be large — AQE broadcasts small
         # ones on its own; only the ~sqrt(n) centroid frame above is
@@ -3190,7 +2890,8 @@ def ivf_index_probe(
             " cast(0.0 AS double), (acc, x) -> acc + x)"
         )
         scored = (
-            probes.join(postings, "cell")
+            _probed_cells(q, cents, nprobe)
+            .join(postings, "cell")
             .where(F.col("vec_id") != F.col("query_id"))
             .join(qe, "query_id")
             .withColumn("cosine", dot / F.sqrt(F.col("_qn2") * F.col("n2")))
@@ -3210,197 +2911,39 @@ def ivf_index_probe(
         )
         if not commit:
             return result
-        # commit gate BEFORE materializing the answer: a cell-pruned
-        # answer may evaluate no pre-existing posting row, so the
-        # scan-side guard alone cannot stop this append from landing
-        # a new-stamped delta on a crashed-rebuild log (which would
-        # blind the ingest entries' newest-live-row gate)
-        _assert_log_stamp(
-            spark,
-            f"{index_path}/postings",
-            expected,
-            "ivf_index_probe",
-            live=lambda part: part["cell"] >= 0,
+        return _IVF_POSTINGS.commit_probe(
+            spark, index_path, op, expected, result,
+            lambda: _IVF_POSTINGS.rows(q, [cents_raw], id_col, vec_col),
         )
-        result = result.localCheckpoint(eager=True)
-        # the batch was deduped up front, so a commit version never
-        # holds two rows for one id (the latest-wins read's max_by on
-        # the version would tie arbitrarily otherwise); the delta is
-        # the ONE shared definition `ivf_index_ingest` also commits
-        batch = _ivf_commit_delta(q, cents, expected)
-        # ingest deltas extend the LOG from the build's base — see
-        # state.RETAIN_ALL for the log-table retention convention
-        from spark_data_test_spark.state import RETAIN_ALL
-
-        write_state_version(
-            batch, f"{index_path}/postings", retain=RETAIN_ALL
-        )
-        return result
     finally:
         qn.unpersist()
 
 
-def _ivf_model_hash_dim(cents_raw):
-    """(content hash, vector dim) of the committed IVF centroids in
-    ONE model-sized aggregate — the build stamp every IVF-Flat path
-    checks/writes plus the dim the batch dim-lock compares against,
-    so neither costs a second driver action. Hash formula is
-    `_build_hash_expr` exactly (see `_model_build_hash`)."""
-    row = cents_raw.agg(
-        F.expr(_build_hash_expr(["cent_id", "cv", "cn2"])).alias("h"),
-        F.max(F.size("cv")).alias("d"),
-    ).first()
-    # empty-model witness is the max(), not the hash: an empty frame
-    # still hashes the fixed (NULL, 0, NULL) aggregate triple to a
-    # non-NULL value (see _model_build_hash) — keep that hash so the
-    # stamp side stays formula-faithful, and report dim 0
-    if row is None:
-        return 0, 0
-    h = 0 if row.h is None else int(row.h)
-    return h, (0 if row.d is None else int(row.d))
-
-
-def _validated_ivf_batch(q, cdim, op):
-    """Dim validation for every IVF-Flat batch (read probe,
-    probe-commit, and ingest alike, so the shared-delta contract
-    covers the error path too): first-row dim lock against the
-    COMMITTED centroid dim (``cdim``, precomputed on the model agg —
-    no extra action here beyond the one first()) — without it
-    `_cell_scored`'s zip_with NULL-pads a mismatched vector, max_by
-    assigns it an arbitrary cell, and unsound posting rows land in
-    the log with a success count. Raises on a wrong-dim batch (the
-    pq/ivfpq siblings' "not divisible" / "subvector dim" analogue);
-    rows deviating from the locked dim drop like `_pq_frame`'s ragged
-    rule. An empty frame (all zero-norm) passes through — the caller
-    decides the empty-batch contract."""
-    first = q.select(F.size("_v").alias("d")).first()
-    if first is None:
-        return q
-    dim = int(first.d)
-    if dim != int(cdim):
-        raise ValueError(
-            f"{op}: batch vector dim {dim} != committed centroid"
-            f" dim {int(cdim)}"
-        )
-    return q.where(F.size("_v") == dim)
-
-
-def _ivf_commit_delta(q, cents, expected):
-    """The IVF-Flat ingest delta — ONE definition shared by
-    `ivf_index_probe(commit=True)` and `ivf_index_ingest`, so the
-    pinned byte-identical-delta contract holds by construction
-    instead of by copy discipline: per deduped batch id, the argmax
-    committed cell (cosine desc, cent_id tie-break), the raw vector
-    and its norm (IVF-Flat inverted lists carry the vectors), stamped
-    with the VERIFIED committed centroids' content hash."""
-    return (
-        _cell_scored(q, cents)
-        .groupBy("_id")
-        .agg(
-            F.max_by(
-                "cent_id",
-                F.struct(
-                    F.col("_cos").alias("c"),
-                    (-F.col("cent_id")).alias("nc"),
-                ),
-            ).alias("cell"),
-            F.first("_v").alias("v"),
-            F.first("_n2").alias("n2"),
-        )
-        .select(
-            F.col("_id").alias("vec_id"),
-            "cell",
-            "v",
-            "n2",
-            F.lit(int(expected)).alias("build_id"),
-            F.lit(_STAMP_FMT).cast("integer").alias("stamp_fmt"),
-        )
-    )
-
-
 def ivf_index_ingest(batch, index_path, id_col="vec_id", vec_col="emb"):
     """Library operator: APPEND a batch to the committed IVF-Flat
-    index WITHOUT answering a query against it (round 18, VERDICT r17
-    item 2) — the pure-ingest sibling of ``ivf_index_probe(
-    commit=True)``, completing the three-index ingest symmetry with
+    index WITHOUT answering a query against it (round 18) — the
+    pure-ingest sibling of ``ivf_index_probe(commit=True)``,
+    completing the three-index ingest symmetry with
     `pq_index_ingest` / `ivfpq_index_ingest`. Each batch row is
     assigned to its argmax cell under the broadcast committed
     centroids and lands (with its raw vector — IVF-Flat inverted
     lists carry the vectors) as the next postings delta — O(batch)
     work, no probe of any cell's posting rows. For every batch that
     commits at least one row the delta is IDENTICAL to what
-    ``ivf_index_probe(batch, ..., commit=True)`` would commit (shared
-    `_ivf_commit_delta` definition; pinned in
-    tests/test_similarity_api.py): the same up-front duplicate-id
-    collapse, zero-norm drop, dim validation, argmax cell rule, and
-    build stamp — latest-wins / tombstone semantics at read are
-    unchanged. Deliberate divergences from the probe path: the result
-    is a plain count (no eagerly-pinned frame for the caller to
-    release), and a DEGENERATE batch — empty, or emptied by the
-    zero-norm drop — is a no-op returning 0 where the probe path
-    would write an empty delta version. Before appending, the newest
-    live log row's build stamp is verified against the committed
-    centroids (`_assert_log_stamp` — the O(1-row) crashed-rebuild
-    gate the probe-commit path also runs before ITS append).
-    Returns the number of rows committed."""
-    from spark_data_test_spark.state import (
-        RETAIN_ALL,
-        read_state_table,
-        write_state_version,
-    )
-
-    spark = batch.sparkSession
-    cents_raw = read_state_table(spark, f"{index_path}/centroids")
-    if cents_raw is None:
-        raise ValueError(
-            f"ivf_index_ingest: no committed index at {index_path}"
-            " (run ivf_index_build first)"
-        )
-    if read_state_table(spark, f"{index_path}/postings") is None:
-        # centroids committed but no postings log: a build crashed
-        # between its commits — refuse to graft deltas onto half an
-        # index
-        raise ValueError(
-            f"ivf_index_ingest: index at {index_path} has centroids"
-            " but no committed postings (re-run ivf_index_build)"
-        )
-    expected, cdim = _ivf_model_hash_dim(cents_raw)
-    _assert_log_stamp(
-        spark,
-        f"{index_path}/postings",
-        expected,
-        "ivf_index_ingest",
-        live=lambda part: part["cell"] >= 0,
-    )
-    cents = F.broadcast(
-        cents_raw.select(
-            "cent_id", F.col("cv").alias("_cv"), F.col("cn2").alias("_cn2")
-        )
-    )
-    d = _pq_dedup_ids(batch, id_col, vec_col).persist()
-    try:
-        # empty-batch no-op BEFORE _norm_vectors (which raises on an
-        # empty frame); an all-zero-norm batch instead passes through
-        # the validation first() and counts 0 below
-        if d.first() is None:
-            return 0
-        q = _validated_ivf_batch(
-            _norm_vectors(d, id_col, vec_col, "ivf_index_ingest"),
-            cdim,
-            "ivf_index_ingest",
-        )
-        delta = _ivf_commit_delta(q, cents, expected).persist()
-        try:
-            n = delta.count()
-            if n:
-                write_state_version(
-                    delta, f"{index_path}/postings", retain=RETAIN_ALL
-                )
-        finally:
-            delta.unpersist()
-        return n
-    finally:
-        d.unpersist()
+    ``ivf_index_probe(batch, ..., commit=True)`` would commit (one
+    shared row definition; pinned in tests/test_similarity_api.py):
+    the same up-front duplicate-id collapse, zero-norm drop, dim
+    validation, argmax cell rule, and build stamp — latest-wins /
+    tombstone semantics at read are unchanged. Deliberate divergences
+    from the probe path: the result is a plain count (no
+    eagerly-pinned frame for the caller to release), and a DEGENERATE
+    batch — empty, or emptied by the zero-norm drop — is a no-op
+    returning 0 where the probe path would write an empty delta
+    version. Before appending, the newest live log row's build stamp
+    is verified against the committed centroids (`assert_log_stamp` —
+    the O(1-row) crashed-rebuild gate the probe-commit path also runs
+    before ITS append). Returns the number of rows committed."""
+    return _IVF_POSTINGS.ingest(batch, index_path, id_col, vec_col)
 
 
 # ---------------------------------------------------------------------------
@@ -3455,6 +2998,18 @@ def _pq_split(frame, m, subdim):
             )
         ).alias("r"),
     ).select("_id", "r.s", "r.sub")
+
+
+def _pq_query_dists(q, codebook, mq, dim, qid):
+    """Per-query exact float distance table to every codebook entry —
+    ``(qid, s, cent_id, d)``, nq x m x ncodes rows (the asymmetric
+    trick: the query stays exact, only the corpus is quantized)."""
+    return (
+        _pq_split(q, mq, dim // mq)
+        .join(F.broadcast(codebook), "s")
+        .withColumn("d", F.expr(_PQ_L2F))
+        .select(F.col("_id").alias(qid), "s", "cent_id", "d")
+    )
 
 
 def _pq_cb_packed_f(codebook):
@@ -3650,15 +3205,10 @@ def pq_topk(
             f"subvector dim {int(cb_row.subdim)} (query dim {dim}, "
             f"m={mq})"
         )
-    qsub = _pq_split(qframe, mq, dim // mq)
     # per-query distance table to every codebook entry: nq x m x
     # ncodes rows — joined to the corpus codes WITHOUT a hint (AQE
     # broadcasts modest batches; a huge batch shuffles on (s, code))
-    qd = (
-        qsub.join(F.broadcast(codebook), "s")
-        .withColumn("d", F.expr(_PQ_L2F))
-        .select(F.col("_id").alias("_q"), "s", "cent_id", "d")
-    )
+    qd = _pq_query_dists(qframe, codebook, mq, dim, "_q")
     adc = (
         codes.withColumnRenamed("code", "cent_id")
         .join(qd, ["s", "cent_id"])
@@ -3678,6 +3228,38 @@ def pq_topk(
             "rank",
             "adc_dist",
         )
+    )
+
+
+def _cell_stats(resolved, stale):
+    """The IVF families' live-side stats row: n_live, n_cells_used,
+    max_cell_rows and n_stale fold out of one per-cell histogram, so
+    the resolve subplan executes ONCE for all of them."""
+    per_cell = resolved.groupBy("cell").agg(
+        F.count(F.lit(1)).alias("_n"),
+        F.sum(stale.cast("long")).alias("_st"),
+    )
+    return per_cell.agg(
+        F.coalesce(F.sum("_n"), F.lit(0)).cast("long").alias("n_live"),
+        F.count(F.lit(1)).alias("n_cells_used"),
+        F.coalesce(F.max("_n"), F.lit(0)).cast("long").alias(
+            "max_cell_rows"
+        ),
+        F.coalesce(F.sum("_st"), F.lit(0)).cast("long").alias("n_stale"),
+    )
+
+
+def _codebook_shape(spark, codebook):
+    """One-row ``(m, n_code_rows)`` of the committed PQ codebook, NULLs
+    when it is missing (stats observe even half-built indexes)."""
+    if codebook is None:
+        return spark.range(1).select(
+            F.lit(None).cast("long").alias("m"),
+            F.lit(None).cast("long").alias("n_code_rows"),
+        )
+    return codebook.agg(
+        (F.max("s") + 1).cast("long").alias("m"),
+        F.count(F.lit(1)).alias("n_code_rows"),
     )
 
 
@@ -3701,74 +3283,27 @@ def ivf_index_stats(spark, index_path):
       after a suspected crashed rebuild, before deciding to re-run
       the build. A postings log with NO committed centroids at all
       (corrupted half-state) reads out as ``model_hash`` NULL with
-      ``n_stale`` = ``n_live`` — every live row unverifiable (ADVICE
-      r15: stats observe even fully damaged indexes).
+      ``n_stale`` = ``n_live`` — every live row unverifiable.
 
     All aggregates run distributed over the log; only the single
     summary row reaches the driver. Returns None for a missing
     index."""
-    from spark_data_test_spark.state import (
-        read_state_table,
-        read_state_union,
-    )
-
-    log = read_state_union(
+    return _IVF_POSTINGS.stats(
         spark,
-        f"{index_path}/postings",
-        version_col="_pv",
-        allow_missing_columns=True,
-    )
-    if log is None:
-        return None
-    cents = read_state_table(spark, f"{index_path}/centroids")
-    # a postings log without committed centroids is CORRUPTED state
-    # (the build commits model before log), but stats MEASURE damage,
-    # they never raise (ADVICE r15 — probes raise, stats observe): the
-    # readout comes back with model_hash NULL and n_stale = n_live,
-    # since every live row is unverifiable against a missing model.
-    if cents is None:
-        exp_lit = F.lit(None).cast("long")
-        stale = F.lit(True)
-    else:
-        expected = _model_build_hash(cents, ["cent_id", "cv", "cn2"])
-        exp_lit = F.lit(expected).cast("long")
-        stale = ~F.col("build_id").eqNullSafe(exp_lit)
-    resolved = _resolved_postings(spark, index_path)
-    # n_live and the stale count fold out of the per-cell histogram,
-    # so the resolve subplan executes ONCE for all live-side stats
-    per_cell = resolved.groupBy("cell").agg(
-        F.count(F.lit(1)).alias("_n"),
-        F.sum(stale.cast("long")).alias("_st"),
-    )
-    cells = per_cell.agg(
-        F.coalesce(F.sum("_n"), F.lit(0)).cast("long").alias("n_live"),
-        F.count(F.lit(1)).alias("n_cells_used"),
-        F.coalesce(F.max("_n"), F.lit(0)).cast("long").alias(
-            "max_cell_rows"
-        ),
-        F.coalesce(F.sum("_st"), F.lit(0)).cast("long").alias("n_stale"),
-    )
-    raw = log.agg(
-        F.count(F.lit(1)).alias("n_log_rows"),
-        F.count_distinct("_pv").alias("n_versions"),
-        F.sum(
-            (F.col("cell") == F.lit(_TOMBSTONE_CELL)).cast("long")
-        ).alias("n_tombstones"),
-    )
-    return (
-        cells.crossJoin(F.broadcast(raw))
-        .select(
+        index_path,
+        lambda spark, resolved, stale, models: [
+            _cell_stats(resolved, stale)
+        ],
+        [
             "n_live",
             "n_cells_used",
             "n_log_rows",
             "n_versions",
-            F.coalesce("n_tombstones", F.lit(0)).cast("long").alias(
-                "n_tombstones"
-            ),
+            "n_tombstones",
             "max_cell_rows",
-            exp_lit.alias("model_hash"),
+            "model_hash",
             "n_stale",
-        )
+        ],
     )
 
 
@@ -3779,42 +3314,18 @@ def ivf_index_stats(spark, index_path):
 # SNAPSHOT (the trained model, m x ncodes rows) plus a `codes/` LOG
 # (one row per vector holding its m packed codes — 4 small ints vs a
 # 256-byte raw vector, the memory story that makes a 100 TB embedding
-# corpus searchable). Build / probe(commit=True) ingest / delete /
-# compact / stats ride the exact helpers and merge rule the IVF
-# postings log uses, so every lifecycle guarantee (latest-wins,
+# corpus searchable). Build / ingest / delete / compact / stats are the
+# shared `IndexLog` lifecycle, so every guarantee (latest-wins,
 # tombstone-after-resolve, compaction == resolved view) carries over.
 # ---------------------------------------------------------------------------
 
 
-def _pq_dedup_ids(corpus, id_col, vec_col):
-    """One row per id, deterministically: a batch (or corpus) may carry
-    the same id twice with DIFFERENT vectors; both would land in ONE
-    commit version, where the latest-wins read's max_by on the version
-    ties arbitrarily. Keep the greatest (squared-norm, vector) pair per
-    id — norm first so a zero-norm duplicate can never outrank a live
-    vector and then silently vanish in the IVF family's zero-norm drop
-    (ADVICE r15: lexicographic-greatest alone kept e.g. [0,0] over
-    [-1,-5], erasing the id from both the answer and the commit);
-    vector order (arrays are orderable) breaks exact-norm ties."""
-    v = F.col(vec_col)
-    n2 = F.expr(
-        f"aggregate({vec_col}, cast(0.0 as double), (a, x) -> a + x * x)"
-    )
-    return (
-        corpus.select(
-            F.col(id_col).alias(id_col),
-            F.col(vec_col).cast("array<double>").alias(vec_col),
-        )
-        .where(v.isNotNull())
-        .groupBy(id_col)
-        .agg(F.max_by(vec_col, F.struct(n2, v)).alias(vec_col))
-    )
-
-
-def _pq_pack_codes(codes, id_col):
-    """(id, s, code) x m -> one (vec_id, codes array) row per id: the
-    log-table unit, so latest-wins resolves a re-ingested id's m codes
-    as ONE atomic replacement (never a mix of old and new subspaces)."""
+def _pq_pack_codes(corpus, codebook, id_col, vec_col):
+    """``corpus`` encoded against ``codebook`` and packed to one
+    (vec_id, codes array) row per id: the log-table unit, so
+    latest-wins resolves a re-ingested id's m codes as ONE atomic
+    replacement (never a mix of old and new subspaces)."""
+    codes = pq_encode(corpus, codebook, id_col=id_col, vec_col=vec_col)
     return (
         codes.groupBy(id_col)
         .agg(
@@ -3825,6 +3336,99 @@ def _pq_pack_codes(codes, id_col):
             F.expr("transform(_p, r -> r.code)").alias("codes"),
         )
     )
+
+
+def _pq_batch_codes(q, codebook, id_col, vec_col):
+    """Packed codes of a validated internal (_id, _v) batch."""
+    surv = q.select(F.col("_id").alias(id_col), F.col("_v").alias(vec_col))
+    return _pq_pack_codes(surv, codebook, id_col, vec_col)
+
+
+def _pq_codebook_row(codebook):
+    """(content hash, shape row) of a committed PQ codebook in ONE
+    model-sized aggregate — ``m1`` (max subspace index), ``subdim``,
+    and ``bid`` (the content hash, `build_hash_expr` exactly). Shared
+    by every codes-based probe/ingest call site so the stamp-parity
+    contract between a probe and its ingest sibling cannot drift."""
+    row = codebook.agg(
+        F.max("s").alias("m1"),
+        F.max(F.size("csub")).alias("subdim"),
+        F.expr(build_hash_expr(["s", "cent_id", "csub"])).alias("bid"),
+    ).first()
+    return int(row.bid), row
+
+
+def _pq_batch_mq(dim, cb_row, op):
+    """The committed codebook's m, after checking a batch of vector
+    dim ``dim`` splits into its subvectors: m must divide dim and the
+    subvector dims must match (a mismatch would silently truncate in
+    `_pq_split` or NULL-pad the distance fold)."""
+    mq = int(cb_row.m1) + 1
+    if dim % mq:
+        raise ValueError(
+            f"{op}: vector dim {dim} not divisible by"
+            f" the committed codebook's m={mq}"
+        )
+    if dim // mq != int(cb_row.subdim):
+        raise ValueError(
+            f"{op}: subvector dim {dim // mq} != committed codebook"
+            f" subvector dim {int(cb_row.subdim)} (dim {dim}, m={mq})"
+        )
+    return mq
+
+
+def _adc_topk(adc, qid, k):
+    """(query_id, neighbor_id, rank, adc_dist): the ``k`` best ADC
+    candidates per query by (adc_dist asc, neighbor_id)."""
+    w = Window.partitionBy(qid).orderBy(
+        F.col("adc_dist").asc(), F.col("vec_id").asc()
+    )
+    return (
+        adc.withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= int(k))
+        .select(
+            F.col(qid).alias("query_id"),
+            F.col("vec_id").alias("neighbor_id"),
+            "rank",
+            "adc_dist",
+        )
+    )
+
+
+def _pq_shape_checked(dedup, cb_row, op, id_col, vec_col):
+    """Batch shape validation shared by the PQ-codes commit paths
+    (`pq_index_probe` and `pq_index_ingest`) — which rows REACH the
+    shared delta is part of the identical-delta contract, so the
+    deciding code has one definition too: first-row dim lock +
+    ragged-row drop (`_pq_frame`), then the committed-codebook shape
+    checks (`_pq_batch_mq`). Returns ``(qframe, dim, mq)``; raises on
+    a shape mismatch (and via `_pq_frame` on an empty frame — the
+    ingest path checks emptiness first because its contract is a
+    0-count no-op)."""
+    qframe, dim = _pq_frame(dedup, id_col, vec_col, op)
+    return qframe, dim, _pq_batch_mq(dim, cb_row, op)
+
+
+# The PQ codes log: one (vec_id, codes) row per vector; tombstones are
+# NULL-codes rows. An ingest delta is the validated batch encoded
+# against the committed codebook.
+_PQ_CODES = IndexLog(
+    family="pq",
+    log="codes",
+    models=(("codebook", ("s", "cent_id", "csub")),),
+    models_noun="a codebook",
+    payload=("codes",),
+    guarded="codes",
+    tomb=(("codes", None),),
+    live=lambda: F.col("codes").isNotNull(),
+    model_row=_pq_codebook_row,
+    batch=lambda d, cb_row, op, id_col, vec_col: _pq_shape_checked(
+        d, cb_row, op, id_col, vec_col
+    )[0],
+    rows=lambda q, models, id_col, vec_col: _pq_batch_codes(
+        q, models[0], id_col, vec_col
+    ),
+)
 
 
 def pq_index_build(
@@ -3861,105 +3465,22 @@ def pq_index_build(
     a codebook is supplied. Duplicate ids in the corpus are collapsed
     deterministically (greatest (squared-norm, vector) pair).
     Returns the number of indexed vectors."""
-    from spark_data_test_spark.state import write_state_version
-
-    c = _pq_dedup_ids(corpus, id_col, vec_col)
+    c = dedup_ids(corpus, id_col, vec_col)
+    # a codebook trained HERE is already `pq_train`'s eager
+    # localCheckpoint — re-pinning it would copy the model a second
+    # time AND leak the inner pin — so only an injected (possibly
+    # nondeterministic) codebook gets the defensive pin
     trained_here = codebook is None
     if trained_here:
         codebook = pq_train(
             c, m=m, ncodes=ncodes, rounds=rounds,
             id_col=id_col, vec_col=vec_col,
         )
-    # pin the model with an eager localCheckpoint so it evaluates
-    # exactly ONCE: the encoding, the build stamp, and the commit
-    # below all read the same pinned rows — a nondeterministic
-    # injected codebook frame can never leave codes encoded or
-    # stamped under a different evaluation than the model probes will
-    # read. Pinning (instead of commit-then-re-read, ADVICE r15)
-    # keeps BOTH commits at the END of the build, so a mid-build
-    # failure of a same-path rebuild leaves the old index fully
-    # serving. Commit order (model, then log): codebook SNAPSHOT
-    # (retain=2 keeps the previous model for time travel), codes LOG
-    # BASE (retain=1 so a same-path rebuild resets the log; ingest
-    # deltas append with RETAIN_ALL from this base); a crash between
-    # the two is detected by the stamp guard. The pin is released
-    # after the final commit (`_release_pin`, ADVICE r16) on success
-    # and failure paths alike; executor-loss posture: see
-    # ivf_index_build's pin note. A codebook we trained OURSELVES is
-    # already `pq_train`'s eager localCheckpoint — re-pinning it would
-    # copy the model a second time AND leak the inner pin — so only an
-    # injected (possibly nondeterministic) codebook gets the
-    # defensive pin here.
-    pinned_cb = (
-        codebook if trained_here else codebook.localCheckpoint(eager=True)
+    return _PQ_CODES.build(
+        index_path,
+        [(codebook, trained_here)],
+        lambda cb: _pq_pack_codes(c, cb, id_col, vec_col),
     )
-    try:
-        bid = _model_build_hash(pinned_cb, ["s", "cent_id", "csub"])
-        packed = (
-            _pq_pack_codes(
-                pq_encode(c, pinned_cb, id_col=id_col, vec_col=vec_col),
-                id_col,
-            )
-            .withColumn("build_id", F.lit(bid))
-            .withColumn(
-                "stamp_fmt", F.lit(_STAMP_FMT).cast("integer")
-            )
-        )
-        packed = packed.persist()
-        try:
-            n = packed.count()
-            os.makedirs(index_path, exist_ok=True)
-            write_state_version(
-                pinned_cb, f"{index_path}/codebook", retain=2
-            )
-            write_state_version(packed, f"{index_path}/codes", retain=1)
-        finally:
-            packed.unpersist()
-        return n
-    finally:
-        _release_pin(pinned_cb)
-
-
-def _resolved_codes(spark, index_path, expect_build=None):
-    """LATEST-WINS view of the codes log — the PQ twin of
-    `_resolved_postings`: each read resolves per vec_id on the commit
-    version (max_by, the (codes, build_id) pair as ONE atomic unit),
-    then drops tombstone winners (NULL codes, see `pq_index_delete`),
-    so the newest commit decides whether an id is live and which codes
-    it carries. With ``expect_build`` every surviving row's build
-    stamp is verified scan-side against the committed codebook's
-    content hash (crashed-rebuild detector, see `_model_build_hash`).
-    Returns None for a missing log."""
-    from spark_data_test_spark.state import read_state_union
-
-    log = read_state_union(
-        spark,
-        f"{index_path}/codes",
-        version_col="_pv",
-        allow_missing_columns=True,
-    )
-    if log is None:
-        return None
-    if "build_id" not in log.columns:
-        log = log.withColumn("build_id", F.lit(None).cast("long"))
-    if "stamp_fmt" not in log.columns:
-        log = log.withColumn("stamp_fmt", F.lit(None).cast("integer"))
-    out = (
-        log.groupBy("vec_id")
-        .agg(
-            F.max_by(
-                F.struct("codes", "build_id", "stamp_fmt"), F.col("_pv")
-            ).alias("_p")
-        )
-        .select("vec_id", "_p.codes", "_p.build_id", "_p.stamp_fmt")
-        .where(F.col("codes").isNotNull())
-    )
-    if expect_build is not None:
-        out = _stamp_guard(
-            out, "codes", expect_build, "pq_index_probe",
-            live=F.col("codes").isNotNull(),
-        )
-    return out
 
 
 def pq_index_probe(
@@ -3988,53 +3509,30 @@ def pq_index_probe(
     a fresh `pq_index_build` is the retrain lever and resets the
     log. The ``commit=True`` result is an eager ``localCheckpoint``
     whose pin is CALLER-owned — release it with `release_model_pin`
-    once read (ADVICE r17). A pure-ingest workload should call
-    `pq_index_ingest` instead: it commits the identical delta WITHOUT
-    the flat ADC scan this probe pays (O(index) per call — the
-    measured x30 lifecycle slope, DECOMP_INDEX_LIFECYCLE r17) and
-    returns no pinned frame."""
-    from spark_data_test_spark.state import (
-        RETAIN_ALL,
-        read_state_table,
-        write_state_version,
-    )
-
+    once read. A pure-ingest workload should call `pq_index_ingest`
+    instead: it commits the identical delta WITHOUT the flat ADC scan
+    this probe pays (O(index) per call — the measured x30 lifecycle
+    slope, DECOMP_INDEX_LIFECYCLE r17) and returns no pinned frame."""
+    op = "pq_index_probe"
     spark = queries.sparkSession
-    codebook = read_state_table(spark, f"{index_path}/codebook")
-    if codebook is None:
-        raise ValueError(
-            f"pq_index_probe: no committed index at {index_path}"
-            " (run pq_index_build first)"
-        )
-    cb_row = _pq_codebook_row(codebook)
-    expected = int(cb_row.bid)
-    codes = _resolved_codes(spark, index_path, expect_build=expected)
-    if codes is None:
-        raise ValueError(
-            f"pq_index_probe: index at {index_path} has a codebook but "
-            "no committed codes (re-run pq_index_build)"
-        )
+    (codebook,), expected, cb_row, codes = _PQ_CODES.open(
+        spark, index_path, op
+    )
     # a batch carrying one id twice would sum BOTH rows' distance-table
     # entries into one ADC score — collapse deterministically up front,
     # the same rule the commit path already applies; persisted BEFORE
     # the validation first() so the dedup shuffle runs once, not once
     # per action (released in the finally — for a lazy commit=False
     # return the caller's evaluation recomputes, exactly as before)
-    queries = _pq_dedup_ids(queries, id_col, vec_col).persist()
+    queries = dedup_ids(queries, id_col, vec_col).persist()
     try:
         qframe, dim, mq = _pq_shape_checked(
-            queries, cb_row, "pq_index_probe", id_col, vec_col
+            queries, cb_row, op, id_col, vec_col
         )
-        cb = F.broadcast(codebook)
-        qsub = _pq_split(qframe, mq, dim // mq)
-        # per-query distance table: nq x m x ncodes rows, joined to the
-        # exploded live codes WITHOUT a hint (AQE broadcasts modest
-        # batches; a huge batch shuffles on (s, cent_id))
-        qd = (
-            qsub.join(cb, "s")
-            .withColumn("d", F.expr(_PQ_L2F))
-            .select(F.col("_id").alias("_q"), "s", "cent_id", "d")
-        )
+        # the distance table joins the exploded live codes WITHOUT a
+        # hint (AQE broadcasts modest batches; a huge batch shuffles on
+        # (s, cent_id))
+        qd = _pq_query_dists(qframe, codebook, mq, dim, "_q")
         flat = codes.select(
             "vec_id", F.posexplode("codes").alias("s", "cent_id")
         )
@@ -4044,177 +3542,48 @@ def pq_index_probe(
             .groupBy("_q", "vec_id")
             .agg(F.sum("d").alias("adc_dist"))
         )
-        w = Window.partitionBy("_q").orderBy(
-            F.col("adc_dist").asc(), F.col("vec_id").asc()
-        )
-        result = (
-            adc.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= int(k))
-            .select(
-                F.col("_q").alias("query_id"),
-                F.col("vec_id").alias("neighbor_id"),
-                "rank",
-                "adc_dist",
-            )
-        )
+        result = _adc_topk(adc, "_q", k)
         if not commit:
             return result
-        # commit gate BEFORE materializing the answer: an answer that
-        # evaluates no pre-existing code row (e.g. an empty batch after
-        # filters) would let this append land a new-stamped delta on a
-        # crashed-rebuild log and blind the newest-live-row gate
-        _assert_log_stamp(
-            spark,
-            f"{index_path}/codes",
-            expected,
-            "pq_index_probe",
-            live=lambda part: part["codes"].isNotNull(),
-        )
-        result = result.localCheckpoint(eager=True)
         # commit exactly the rows the probe ANSWERED for: encode the
         # dedup-and-dim-validated qframe (a mixed-dim batch's deviant
         # rows were dropped from the answer and must not reach the
         # codes log, where pq_encode's own first-row dim lock could
-        # otherwise flip which side survives); the delta is the ONE
-        # shared definition `pq_index_ingest` also commits
-        batch = _pq_commit_delta(
-            qframe, codebook, expected, id_col, vec_col
+        # otherwise flip which side survives)
+        return _PQ_CODES.commit_probe(
+            spark, index_path, op, expected, result,
+            lambda: _PQ_CODES.rows(qframe, [codebook], id_col, vec_col),
         )
-        write_state_version(
-            batch, f"{index_path}/codes", retain=RETAIN_ALL
-        )
-        return result
     finally:
         queries.unpersist()
 
 
-def _pq_shape_checked(dedup, cb_row, op, id_col, vec_col):
-    """Batch shape validation shared by the PQ-codes commit paths
-    (`pq_index_probe` and `pq_index_ingest`) — which rows REACH the
-    shared `_pq_commit_delta` is part of the identical-delta
-    contract, so the deciding code has one definition too: first-row
-    dim lock + ragged-row drop (`_pq_frame`), then the two
-    committed-codebook shape checks (m divisibility, subvector dim)
-    against the shape agg's ``cb_row``. Returns ``(qframe, dim, mq)``
-    — ``mq`` so the caller's `_pq_split` width and the divisibility
-    check here share one derivation; raises with ``op``-prefixed
-    messages on a shape mismatch (and via `_pq_frame` on an empty
-    frame — the ingest path checks emptiness first because its
-    contract is a 0-count no-op)."""
-    qframe, dim = _pq_frame(dedup, id_col, vec_col, op)
-    mq = int(cb_row.m1) + 1
-    if dim % mq:
-        raise ValueError(
-            f"{op}: vector dim {dim} not divisible by"
-            f" the committed codebook's m={mq}"
-        )
-    if dim // mq != int(cb_row.subdim):
-        raise ValueError(
-            f"{op}: subvector dim {dim // mq} != committed codebook"
-            f" subvector dim {int(cb_row.subdim)} (dim {dim}, m={mq})"
-        )
-    return qframe, dim, mq
-
-
-def _pq_commit_delta(qframe, codebook, expected, id_col, vec_col):
-    """The PQ ingest delta — ONE definition shared by
-    `pq_index_probe(commit=True)` and `pq_index_ingest`, so the
-    pinned byte-identical-delta contract holds by construction
-    instead of by copy discipline: the dedup-and-dim-validated batch
-    encoded against the VERIFIED committed codebook, packed to one
-    (vec_id, codes) row per id, stamped with the codebook's content
-    hash and the current stamp format."""
-    return _pq_pack_codes(
-        pq_encode(
-            qframe.select(
-                F.col("_id").alias(id_col), F.col("_v").alias(vec_col)
-            ),
-            codebook,
-            id_col=id_col,
-            vec_col=vec_col,
-        ),
-        id_col,
-    ).withColumn("build_id", F.lit(int(expected))).withColumn(
-        "stamp_fmt", F.lit(_STAMP_FMT).cast("integer")
-    )
-
-
 def pq_index_ingest(batch, index_path, id_col="vec_id", vec_col="emb"):
     """Library operator: APPEND a batch to the committed PQ index
-    WITHOUT answering a query against it (round 18, VERDICT r17 item
-    2) — the pure-ingest sibling of ``pq_index_probe(commit=True)``.
-    The batch is encoded against the committed codebook and its packed
-    codes land as the next codes delta — O(batch x codebook) work.
-    The probe-then-commit path additionally ADC-scans ALL n live codes
-    (the flat-PQ probe contract, O(index) per call), which an
-    ingest-cadence workload pays just to discard the answer —
-    `DECOMP_INDEX_LIFECYCLE.json` (round 17) measured that scan as the
-    entire x30 lifecycle slope. For every batch that commits at least
-    one row the delta is IDENTICAL to what
-    ``pq_index_probe(batch, ..., commit=True)`` would commit (shared
-    `_pq_commit_delta` definition; pinned in
+    WITHOUT answering a query against it (round 18) — the pure-ingest
+    sibling of ``pq_index_probe(commit=True)``. The batch is encoded
+    against the committed codebook and its packed codes land as the
+    next codes delta — O(batch x codebook) work. The probe-then-commit
+    path additionally ADC-scans ALL n live codes (the flat-PQ probe
+    contract, O(index) per call), which an ingest-cadence workload
+    pays just to discard the answer — `DECOMP_INDEX_LIFECYCLE.json`
+    (round 17) measured that scan as the entire x30 lifecycle slope.
+    For every batch that commits at least one row the delta is
+    IDENTICAL to what ``pq_index_probe(batch, ..., commit=True)``
+    would commit (one shared row definition; pinned in
     tests/test_pq_index_api.py): the same up-front duplicate-id
-    collapse (`_pq_dedup_ids`), first-row dim lock and ragged-row
-    drop (`_pq_frame`), dim validation, and build stamp — dup
-    collapse against rows ALREADY in the index needs no probe at all,
-    because the log contract resolves a re-ingested id latest-wins at
-    read. Deliberate divergences from the probe path: the result is a
+    collapse (`dedup_ids`), first-row dim lock and ragged-row drop
+    (`_pq_frame`), dim validation, and build stamp — dup collapse
+    against rows ALREADY in the index needs no probe at all, because
+    the log contract resolves a re-ingested id latest-wins at read.
+    Deliberate divergences from the probe path: the result is a
     plain count (no eagerly-pinned frame for the caller to release),
     and an empty batch is a no-op returning 0. Before appending, the
     newest live log row's build stamp is verified against the
-    committed codebook (`_assert_log_stamp` — the O(1-row)
+    committed codebook (`assert_log_stamp` — the O(1-row)
     crashed-rebuild gate the probe-commit path also runs before ITS
     append). Returns the number of rows committed."""
-    from spark_data_test_spark.state import (
-        RETAIN_ALL,
-        read_state_table,
-        write_state_version,
-    )
-
-    spark = batch.sparkSession
-    codebook = read_state_table(spark, f"{index_path}/codebook")
-    if codebook is None:
-        raise ValueError(
-            f"pq_index_ingest: no committed index at {index_path}"
-            " (run pq_index_build first)"
-        )
-    if read_state_table(spark, f"{index_path}/codes") is None:
-        # codebook committed but no codes log: a build crashed between
-        # its commits — refuse to graft deltas onto half an index
-        raise ValueError(
-            f"pq_index_ingest: index at {index_path} has a codebook but"
-            " no committed codes (re-run pq_index_build)"
-        )
-    cb_row = _pq_codebook_row(codebook)
-    expected = int(cb_row.bid)
-    _assert_log_stamp(
-        spark,
-        f"{index_path}/codes",
-        expected,
-        "pq_index_ingest",
-        live=lambda part: part["codes"].isNotNull(),
-    )
-    d = _pq_dedup_ids(batch, id_col, vec_col).persist()
-    try:
-        if d.first() is None:
-            return 0
-        qframe, _, _ = _pq_shape_checked(
-            d, cb_row, "pq_index_ingest", id_col, vec_col
-        )
-        delta = _pq_commit_delta(
-            qframe, codebook, expected, id_col, vec_col
-        ).persist()
-        try:
-            n = delta.count()
-            if n:
-                write_state_version(
-                    delta, f"{index_path}/codes", retain=RETAIN_ALL
-                )
-        finally:
-            delta.unpersist()
-        return n
-    finally:
-        d.unpersist()
+    return _PQ_CODES.ingest(batch, index_path, id_col, vec_col)
 
 
 def pq_index_delete(spark, index_path, ids, id_col="vec_id"):
@@ -4228,42 +3597,7 @@ def pq_index_delete(spark, index_path, ids, id_col="vec_id"):
     tombstone and every superseded row. ``ids`` is an iterable of id
     values or a DataFrame whose ``id_col`` holds them. Returns the
     committed delta version."""
-    from pyspark.sql import DataFrame
-
-    from spark_data_test_spark.state import (
-        RETAIN_ALL,
-        read_state_table,
-        write_state_version,
-    )
-
-    base = read_state_table(spark, f"{index_path}/codes")
-    if base is None:
-        raise ValueError(
-            f"pq_index_delete: no committed codes at {index_path}"
-            " (run pq_index_build first)"
-        )
-    types = {f.name: f.dataType for f in base.schema.fields}
-    if "build_id" not in types:
-        raise ValueError(
-            f"pq_index_delete: the log at {index_path} predates build"
-            f" stamping (committed by an earlier release) — re-run"
-            f" pq_index_build to upgrade it before deleting"
-        )
-    if isinstance(ids, DataFrame):
-        idf = ids.select(F.col(id_col).alias("vec_id")).distinct()
-    else:
-        ids = list(ids)
-        if not ids:
-            raise ValueError("pq_index_delete: empty id set")
-        idf = spark.createDataFrame([(i,) for i in ids], ["vec_id"]).distinct()
-    tomb = idf.select(
-        F.col("vec_id").cast(types["vec_id"]),
-        F.lit(None).cast(types["codes"]).alias("codes"),
-        # tombstones carry no stamp: they never survive resolution
-        F.lit(None).cast(types["build_id"]).alias("build_id"),
-        F.lit(None).cast("integer").alias("stamp_fmt"),
-    )
-    return write_state_version(tomb, f"{index_path}/codes", retain=RETAIN_ALL)
+    return _PQ_CODES.delete(spark, index_path, ids, id_col)
 
 
 def pq_index_compact(spark, index_path):
@@ -4273,12 +3607,39 @@ def pq_index_compact(spark, index_path):
     committing, exactly as `ivf_index_compact` does for postings.
     Returns the committed snapshot version, or None for a missing
     index."""
-    from spark_data_test_spark.state import write_state_version
+    return _PQ_CODES.compact(spark, index_path)
 
-    resolved = _resolved_codes(spark, index_path)
-    if resolved is None:
-        return None
-    return write_state_version(resolved, f"{index_path}/codes", retain=1)
+
+def _code_bucket_stats(resolved, stale):
+    """The PQ live-side stats row: bucket skew and live/stale rows."""
+    per_bucket = (
+        resolved.select(
+            F.posexplode("codes").alias("s", "code"),
+            stale.cast("long").alias("_st"),
+        )
+        .groupBy("s", "code")
+        .agg(
+            F.count(F.lit(1)).alias("_n"),
+            F.sum("_st").alias("_sts"),
+        )
+    )
+    return per_bucket.agg(
+        # every live row contributes exactly ONE code in subspace 0
+        # whatever m it was encoded under, so row counts fold out of
+        # the s=0 buckets — never divide by the CURRENT codebook's m,
+        # which miscounts rows a crashed retrain left encoded under an
+        # old model with a different m (the exact damage n_stale
+        # exists to measure)
+        F.coalesce(F.max("_n"), F.lit(0)).cast("long").alias(
+            "max_code_rows"
+        ),
+        F.coalesce(
+            F.sum(F.when(F.col("s") == 0, F.col("_n"))), F.lit(0)
+        ).cast("long").alias("_live_rows"),
+        F.coalesce(
+            F.sum(F.when(F.col("s") == 0, F.col("_sts"))), F.lit(0)
+        ).cast("long").alias("_stale_rows"),
+    )
 
 
 def pq_index_stats(spark, index_path):
@@ -4301,98 +3662,29 @@ def pq_index_stats(spark, index_path):
       the damage without raising. A codes log with NO committed
       codebook at all (corrupted half-state) reads out as
       ``model_hash`` / ``m`` / ``n_code_rows`` NULL with ``n_stale``
-      = ``n_live`` (ADVICE r15: stats observe even fully damaged
-      indexes).
+      = ``n_live``.
 
     All aggregates run distributed over the log; only the single
     summary row reaches the driver. Returns None for a missing
     index."""
-    from spark_data_test_spark.state import (
-        read_state_table,
-        read_state_union,
-    )
-
-    log = read_state_union(
+    return _PQ_CODES.stats(
         spark,
-        f"{index_path}/codes",
-        version_col="_pv",
-        allow_missing_columns=True,
-    )
-    if log is None:
-        return None
-    codebook = read_state_table(spark, f"{index_path}/codebook")
-    # a codes log without a committed codebook is CORRUPTED state (the
-    # build commits model before log), but stats MEASURE damage, they
-    # never raise (ADVICE r15 — probes raise, stats observe): the
-    # readout comes back with model_hash / m / n_code_rows NULL and
-    # n_stale = n_live, every live row unverifiable.
-    if codebook is None:
-        exp_lit = F.lit(None).cast("long")
-        stale = F.lit(True)
-    else:
-        expected = _model_build_hash(codebook, ["s", "cent_id", "csub"])
-        exp_lit = F.lit(expected).cast("long")
-        stale = ~F.col("build_id").eqNullSafe(exp_lit)
-    resolved = _resolved_codes(spark, index_path)
-    per_bucket = (
-        resolved.select(
-            F.posexplode("codes").alias("s", "code"),
-            stale.cast("long").alias("_st"),
-        )
-        .groupBy("s", "code")
-        .agg(
-            F.count(F.lit(1)).alias("_n"),
-            F.sum("_st").alias("_sts"),
-        )
-    )
-    live = per_bucket.agg(
-        # every live row contributes exactly ONE code in subspace 0
-        # whatever m it was encoded under, so row counts fold out of
-        # the s=0 buckets — never divide by the CURRENT codebook's m,
-        # which miscounts rows a crashed retrain left encoded under an
-        # old model with a different m (the exact damage n_stale
-        # exists to measure)
-        F.coalesce(F.max("_n"), F.lit(0)).cast("long").alias(
-            "max_code_rows"
-        ),
-        F.coalesce(
-            F.sum(F.when(F.col("s") == 0, F.col("_n"))), F.lit(0)
-        ).cast("long").alias("_live_rows"),
-        F.coalesce(
-            F.sum(F.when(F.col("s") == 0, F.col("_sts"))), F.lit(0)
-        ).cast("long").alias("_stale_rows"),
-    )
-    raw = log.agg(
-        F.count(F.lit(1)).alias("n_log_rows"),
-        F.count_distinct("_pv").alias("n_versions"),
-        F.sum(F.col("codes").isNull().cast("long")).alias("n_tombstones"),
-    )
-    if codebook is None:
-        model = spark.range(1).select(
-            F.lit(None).cast("long").alias("m"),
-            F.lit(None).cast("long").alias("n_code_rows"),
-        )
-    else:
-        model = codebook.agg(
-            (F.max("s") + 1).cast("long").alias("m"),
-            F.count(F.lit(1)).alias("n_code_rows"),
-        )
-    return (
-        live.crossJoin(F.broadcast(raw))
-        .crossJoin(F.broadcast(model))
-        .select(
+        index_path,
+        lambda spark, resolved, stale, models: [
+            _code_bucket_stats(resolved, stale),
+            _codebook_shape(spark, models[0]),
+        ],
+        [
             F.col("_live_rows").alias("n_live"),
             "m",
             "n_code_rows",
             "n_log_rows",
             "n_versions",
-            F.coalesce("n_tombstones", F.lit(0)).cast("long").alias(
-                "n_tombstones"
-            ),
+            "n_tombstones",
             "max_code_rows",
-            exp_lit.alias("model_hash"),
+            "model_hash",
             F.col("_stale_rows").alias("n_stale"),
-        )
+        ],
     )
 
 
@@ -4407,8 +3699,64 @@ def pq_index_stats(spark, index_path):
 # of (vec_id, cell, codes) rows — at 100 TB the inverted lists hold
 # only ids and codes, so they fit where raw vectors cannot, and every
 # lifecycle rule (latest-wins, tombstones, resolving compaction) is
-# shared with the IVF-Flat and PQ indexes above.
+# the shared `IndexLog` one.
 # ---------------------------------------------------------------------------
+
+
+def _ivfpq_model_row(cents, codebook):
+    """(expected stamp, codebook shape row): the XOR of both committed
+    models' content hashes — one agg for the centroids, the codebook
+    hash rides its shape agg."""
+    cent_hash = model_build_hash(cents, ["cent_id", "cv", "cn2"])
+    bid, cb_row = _pq_codebook_row(codebook)
+    return cent_hash ^ bid, cb_row
+
+
+def _ivfpq_shape_checked(dedup, cb_row, op, id_col, vec_col):
+    """Batch shape validation shared by the IVF-PQ commit paths
+    (`ivfpq_index_probe` and `ivfpq_index_ingest`) — which rows REACH
+    the shared delta is part of the identical-delta contract, so the
+    deciding code has one definition too: normalize (drops zero-norm
+    rows), first-row dim lock, the committed-codebook shape checks
+    (`_pq_batch_mq`), then the ragged-row drop. Returns ``(q, dim,
+    mq)``, or ``(None, None, None)`` when the batch is empty after the
+    zero-norm drop — the CALLER owns the degenerate contract (the
+    probe raises "no nonzero vectors", the ingest no-ops to 0)."""
+    q = _norm_vectors(dedup, id_col, vec_col, op)
+    first = q.select(F.size("_v").alias("d")).first()
+    if first is None:
+        return None, None, None
+    dim = int(first.d)
+    mq = _pq_batch_mq(dim, cb_row, op)
+    # ragged rows would mis-split in _pq_split; drop them like
+    # _pq_frame does
+    return q.where(F.size("_v") == dim), dim, mq
+
+
+# The IVF-PQ postings log: one (vec_id, cell, codes) row per vector;
+# tombstones are cell = -1 rows with NULL codes. An ingest delta is,
+# per deduped, dim-filtered batch id, the argmax committed cell AND the
+# packed codes as one atomic posting row.
+_IVFPQ_POSTINGS = IndexLog(
+    family="ivfpq",
+    log="postings",
+    models=(
+        ("centroids", ("cent_id", "cv", "cn2")),
+        ("codebook", ("s", "cent_id", "csub")),
+    ),
+    models_noun="models",
+    payload=("cell", "codes"),
+    guarded="codes",
+    tomb=(("cell", -1), ("codes", None)),
+    live=lambda: F.col("cell") >= 0,
+    model_row=_ivfpq_model_row,
+    batch=lambda d, cb_row, op, id_col, vec_col: _ivfpq_shape_checked(
+        d, cb_row, op, id_col, vec_col
+    )[0],
+    rows=lambda q, models, id_col, vec_col: _assigned_cells(
+        q, _bcast_cents(models[0])
+    ).join(_pq_batch_codes(q, models[1], id_col, vec_col), "vec_id"),
+)
 
 
 def ivfpq_index_build(
@@ -4434,21 +3782,20 @@ def ivfpq_index_build(
     (retain=2 for time travel) plus ``postings/``, the log base of
     one ``(vec_id, cell, codes)`` row per vector. Duplicate ids
     collapse deterministically (greatest (squared-norm, vector)
-    pair); zero-norm vectors are dropped (cosine cell assignment is undefined for them — the
-    ANN-family contract). A same-path rebuild resets the postings log
-    (old cells AND old codes are meaningless under retrained models);
-    the three commits are not atomic together, but every posting row
-    is stamped with the XOR-combined content hash of BOTH committed
-    models and probes verify the stamp, so a crashed rebuild fails
-    the next probe loudly (see `_model_build_hash`). Pass pre-trained
+    pair); zero-norm vectors are dropped (cosine cell assignment is
+    undefined for them — the ANN-family contract). A same-path
+    rebuild resets the postings log (old cells AND old codes are
+    meaningless under retrained models); the three commits are not
+    atomic together, but every posting row is stamped with the
+    XOR-combined content hash of BOTH committed models and probes
+    verify the stamp, so a crashed rebuild fails the next probe
+    loudly (see `index_log.model_build_hash`). Pass pre-trained
     ``centroids`` (``(cent_id, cv, cn2)``, as committed by any build
     of this family) and/or ``codebook`` (a `pq_train` frame) to skip
     that training stage and index the full corpus under the supplied
     model — the train-on-a-sample, add-everything pattern.
     Returns the number of indexed vectors."""
-    from spark_data_test_spark.state import write_state_version
-
-    d = _pq_dedup_ids(corpus, id_col, vec_col)
+    d = dedup_ids(corpus, id_col, vec_col)
     c = _norm_vectors(d, id_col, vec_col, "ivfpq_index_build").persist()
     try:
         surv = c.select(
@@ -4464,146 +3811,27 @@ def ivfpq_index_build(
             )
         else:
             cent_table = centroids.select("cent_id", "cv", "cn2")
-        cb_trained_here = codebook is None
-        if cb_trained_here:
+        # a codebook trained HERE is already `pq_train`'s eager pin
+        # (re-pinning would copy the model twice and leak the inner
+        # pin), so only an injected codebook gets the defensive pin
+        trained_here = codebook is None
+        if trained_here:
             codebook = pq_train(
                 surv, m=m, ncodes=ncodes, rounds=pq_rounds,
                 id_col=id_col, vec_col=vec_col,
             )
-        # pin BOTH models with eager localCheckpoints so each
-        # evaluates exactly ONCE: cell assignment, encoding, the
-        # stamp, and the commits below all read the same pinned rows,
-        # so nondeterministic injected model frames can never leave
-        # postings built under a different evaluation than the models
-        # probes will read. Pinning (instead of commit-then-re-read,
-        # ADVICE r15) keeps all three commits at the END of the
-        # build: a mid-build failure of a same-path rebuild leaves
-        # the old index fully serving. Both pins are released after
-        # the final commit (`_release_pin`, ADVICE r16) on success
-        # and failure paths; executor-loss posture: see
-        # ivf_index_build's pin note. A codebook trained HERE is
-        # already `pq_train`'s eager localCheckpoint (re-pinning would
-        # copy the model twice and leak the inner pin), so only an
-        # injected codebook gets the defensive pin.
-        try:
-            pinned_cents = cent_table.localCheckpoint(eager=True)
-        except BaseException:
-            # a self-trained codebook is already pq_train's eager pin:
-            # release it even when the CENTROID pin is what failed
-            if cb_trained_here:
-                _release_pin(codebook)
-            raise
-        try:
-            pinned_cb = (
-                codebook
-                if cb_trained_here
-                else codebook.localCheckpoint(eager=True)
-            )
-        except BaseException:
-            # only the injected path can raise here (a bare assignment
-            # cannot), so the self-trained codebook pin is not at risk.
-            # If the injected codebook's eager localCheckpoint failed
-            # AFTER partially materializing checkpoint blocks, no frame
-            # handle survives to release them — that partial pin is
-            # reclaimed by the ContextCleaner GC backstop, the
-            # documented best-effort posture (ADVICE r17)
-            _release_pin(pinned_cents)
-            raise
-        try:
-            bid = _model_build_hash(
-                pinned_cents, ["cent_id", "cv", "cn2"]
-            ) ^ _model_build_hash(pinned_cb, ["s", "cent_id", "csub"])
-            cents = F.broadcast(
-                pinned_cents.select(
-                    "cent_id",
-                    F.col("cv").alias("_cv"),
-                    F.col("cn2").alias("_cn2"),
-                )
-            )
-            # round-18 fold assign (see ivf_index_build): identical
-            # argmax winners, no n x ncells explosion, no corpus-sized
-            # exchange; ids are unique here (`_pq_dedup_ids` upstream)
-            assign = _argmax_cell_d(c, cents).select(
-                F.col("_id").alias("vec_id"), F.col("_cell").alias("cell")
-            )
-            packed = _pq_pack_codes(
-                pq_encode(
-                    surv, pinned_cb, id_col=id_col, vec_col=vec_col
-                ),
-                id_col,
-            )
-            postings = (
-                assign.join(packed, "vec_id")
-                .withColumn("build_id", F.lit(bid))
-                .withColumn(
-                    "stamp_fmt", F.lit(_STAMP_FMT).cast("integer")
-                )
-            )
-            postings = postings.persist()
-            try:
-                n = postings.count()
-                os.makedirs(index_path, exist_ok=True)
-                write_state_version(
-                    pinned_cents, f"{index_path}/centroids", retain=2
-                )
-                write_state_version(
-                    pinned_cb, f"{index_path}/codebook", retain=2
-                )
-                write_state_version(
-                    postings, f"{index_path}/postings", retain=1
-                )
-            finally:
-                postings.unpersist()
-            return n
-        finally:
-            _release_pin(pinned_cents)
-            _release_pin(pinned_cb)
+        # round-18 fold assign (see ivf_index_build): identical argmax
+        # winners, no n x ncells explosion, no corpus-sized exchange;
+        # ids are unique here (`dedup_ids` upstream)
+        return _IVFPQ_POSTINGS.build(
+            index_path,
+            [(cent_table, False), (codebook, trained_here)],
+            lambda cents, cb: _argmax_cell_d(c, _bcast_cents(cents))
+            .select(F.col("_id").alias("vec_id"), F.col("_cell").alias("cell"))
+            .join(_pq_pack_codes(surv, cb, id_col, vec_col), "vec_id"),
+        )
     finally:
         c.unpersist()
-
-
-def _resolved_ivfpq_postings(spark, index_path, expect_build=None):
-    """LATEST-WINS view of the IVF-PQ postings log: per vec_id the
-    newest commit's (cell, codes, build_id) triple wins as ONE atomic
-    unit (a re-ingested vector can change cell and codes together,
-    never a mix), then tombstone winners (cell = -1) drop. With
-    ``expect_build`` every surviving row's build stamp is verified
-    scan-side against the committed models' combined content hash
-    (crashed-rebuild detector). Returns None for a missing log."""
-    from spark_data_test_spark.state import read_state_union
-
-    log = read_state_union(
-        spark,
-        f"{index_path}/postings",
-        version_col="_pv",
-        allow_missing_columns=True,
-    )
-    if log is None:
-        return None
-    if "build_id" not in log.columns:
-        log = log.withColumn("build_id", F.lit(None).cast("long"))
-    if "stamp_fmt" not in log.columns:
-        log = log.withColumn("stamp_fmt", F.lit(None).cast("integer"))
-    out = (
-        log.groupBy("vec_id")
-        .agg(
-            F.max_by(
-                F.struct("cell", "codes", "build_id", "stamp_fmt"),
-                F.col("_pv"),
-            ).alias("_p")
-        )
-        .select(
-            "vec_id", "_p.cell", "_p.codes", "_p.build_id",
-            "_p.stamp_fmt",
-        )
-        .where(F.col("cell") >= 0)
-    )
-    if expect_build is not None:
-        out = _stamp_guard(
-            out, "codes", expect_build, "ivfpq_index_probe",
-            live=F.col("cell") >= 0,
-        )
-    return out
 
 
 def ivfpq_index_probe(
@@ -4640,79 +3868,34 @@ def ivfpq_index_probe(
     limit; a fresh `ivfpq_index_build` retrains both models and
     resets the log. The ``commit=True`` result is an eager
     ``localCheckpoint`` whose pin is CALLER-owned — release it with
-    `release_model_pin` once read (ADVICE r17); a pure-ingest
-    workload should call `ivfpq_index_ingest` instead (identical
-    delta, no probe work, no pinned frame)."""
-    from spark_data_test_spark.state import (
-        RETAIN_ALL,
-        read_state_table,
-        write_state_version,
-    )
-
+    `release_model_pin` once read; a pure-ingest workload should call
+    `ivfpq_index_ingest` instead (identical delta, no probe work, no
+    pinned frame)."""
+    op = "ivfpq_index_probe"
     spark = queries.sparkSession
-    cents_raw = read_state_table(spark, f"{index_path}/centroids")
-    codebook = read_state_table(spark, f"{index_path}/codebook")
-    if cents_raw is None or codebook is None:
-        raise ValueError(
-            f"ivfpq_index_probe: no committed index at {index_path}"
-            " (run ivfpq_index_build first)"
-        )
-    # expected build stamp = XOR of both committed models' content
-    # hashes; one extra model-sized agg for the centroids, the codebook
-    # hash rides the existing shape agg below
-    cent_hash = _model_build_hash(cents_raw, ["cent_id", "cv", "cn2"])
-    cb_row = _pq_codebook_row(codebook)
-    expected = cent_hash ^ int(cb_row.bid)
-    postings = _resolved_ivfpq_postings(
-        spark, index_path, expect_build=expected
+    (cents_raw, codebook), expected, cb_row, postings = _IVFPQ_POSTINGS.open(
+        spark, index_path, op
     )
-    if postings is None:
-        raise ValueError(
-            f"ivfpq_index_probe: index at {index_path} has models but "
-            "no committed postings (re-run ivfpq_index_build)"
-        )
-    cents = F.broadcast(
-        cents_raw.select(
-            "cent_id", F.col("cv").alias("_cv"), F.col("cn2").alias("_cn2")
-        )
-    )
+    cents = _bcast_cents(cents_raw)
     # collapse duplicate batch ids up front (greatest (norm, vector)
-    # pair): a dup id
-    # would otherwise mix two rows' cells in one probe window and sum
-    # both distance tables into one ADC score; persisted BEFORE the
-    # validation first()s so the dedup shuffle runs once, not once
-    # per action
-    queries = _pq_dedup_ids(queries, id_col, vec_col).persist()
+    # pair): a dup id would otherwise mix two rows' cells in one probe
+    # window and sum both distance tables into one ADC score;
+    # persisted BEFORE the validation first()s so the dedup shuffle
+    # runs once, not once per action
+    queries = dedup_ids(queries, id_col, vec_col).persist()
     try:
         q, dim, mq = _ivfpq_shape_checked(
-            queries, cb_row, "ivfpq_index_probe", id_col, vec_col
+            queries, cb_row, op, id_col, vec_col
         )
         if q is None:
-            raise ValueError(
-                "ivfpq_index_probe: query batch has no nonzero vectors"
-            )
+            raise ValueError(f"{op}: query batch has no nonzero vectors")
         q = q.persist()
     except BaseException:
         queries.unpersist()
         raise
     try:
-        wq = Window.partitionBy("_id").orderBy(
-            F.col("_cos").desc(), "cent_id"
-        )
-        probes = (
-            _cell_scored(q, cents)
-            .withColumn("_rn", F.row_number().over(wq))
-            .where(F.col("_rn") <= int(nprobe))
-            .select(
-                F.col("_id").alias("query_id"),
-                F.col("cent_id").alias("cell"),
-            )
-        )
-        qd = (
-            _pq_split(q.select("_id", "_v"), mq, dim // mq)
-            .join(F.broadcast(codebook), "s")
-            .withColumn("d", F.expr(_PQ_L2F))
-            .select(F.col("_id").alias("query_id"), "s", "cent_id", "d")
+        qd = _pq_query_dists(
+            q.select("_id", "_v"), codebook, mq, dim, "query_id"
         )
         flat = postings.select(
             "vec_id", "cell", F.posexplode("codes").alias("s", "cent_id")
@@ -4722,144 +3905,43 @@ def ivfpq_index_probe(
         # UNHINTED (AQE broadcasts modest batches; only the two
         # model-sized frames above are unconditionally broadcast)
         adc = (
-            probes.join(flat, "cell")
+            _probed_cells(q, cents, nprobe)
+            .join(flat, "cell")
             .where(F.col("vec_id") != F.col("query_id"))
             .join(qd, ["query_id", "s", "cent_id"])
             .groupBy("query_id", "vec_id")
             .agg(F.sum("d").alias("adc_dist"))
         )
-        w = Window.partitionBy("query_id").orderBy(
-            F.col("adc_dist").asc(), F.col("vec_id").asc()
-        )
-        result = (
-            adc.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= int(k))
-            .select(
-                "query_id",
-                F.col("vec_id").alias("neighbor_id"),
-                "rank",
-                "adc_dist",
-            )
-        )
+        result = _adc_topk(adc, "query_id", k)
         if not commit:
             return result
-        # commit gate BEFORE materializing the answer: a cell-pruned
-        # answer may evaluate no pre-existing posting row, so the
-        # scan-side guard alone cannot stop this append from landing
-        # a new-stamped delta on a crashed-rebuild log (which would
-        # blind the ingest entries' newest-live-row gate)
-        _assert_log_stamp(
-            spark,
-            f"{index_path}/postings",
-            expected,
-            "ivfpq_index_probe",
-            live=lambda part: part["cell"] >= 0,
-        )
-        result = result.localCheckpoint(eager=True)
         # commit exactly the rows the probe ANSWERED for: reuse the
         # persisted, dedup-and-dim-filtered q rather than re-deriving
         # from the raw batch — a ragged row excluded from the answer
-        # must never reach the postings log (and the batch is not
-        # re-normalized a second time); the delta is the ONE shared
-        # definition `ivfpq_index_ingest` also commits
-        write_state_version(
-            _ivfpq_commit_delta(
-                q, cents, codebook, expected, id_col, vec_col
+        # must never reach the postings log
+        return _IVFPQ_POSTINGS.commit_probe(
+            spark, index_path, op, expected, result,
+            lambda: _IVFPQ_POSTINGS.rows(
+                q, [cents_raw, codebook], id_col, vec_col
             ),
-            f"{index_path}/postings",
-            retain=RETAIN_ALL,
         )
-        return result
     finally:
         q.unpersist()
         queries.unpersist()
 
 
-def _ivfpq_shape_checked(dedup, cb_row, op, id_col, vec_col):
-    """Batch shape validation shared by the IVF-PQ commit paths
-    (`ivfpq_index_probe` and `ivfpq_index_ingest`) — which rows REACH
-    the shared `_ivfpq_commit_delta` is part of the identical-delta
-    contract, so the deciding code has one definition too: normalize
-    (drops zero-norm rows), first-row dim lock, the two
-    committed-codebook shape checks against the shape agg's
-    ``cb_row``, then the ragged-row drop. Returns ``(q, dim, mq)``,
-    or ``(None, None, mq)`` when the batch is empty after the
-    zero-norm drop
-    — the CALLER owns the degenerate contract (the probe raises "no
-    nonzero vectors", the ingest no-ops to 0); shape mismatches raise
-    here with ``op``-prefixed messages. ``mq`` is returned (always)
-    so the caller's `_pq_split` width and the divisibility check
-    here share one derivation."""
-    mq = int(cb_row.m1) + 1
-    q = _norm_vectors(dedup, id_col, vec_col, op)
-    first = q.select(F.size("_v").alias("d")).first()
-    if first is None:
-        return None, None, mq
-    dim = int(first.d)
-    if dim % mq:
-        raise ValueError(
-            f"{op}: vector dim {dim} not divisible by"
-            f" the committed codebook's m={mq}"
-        )
-    if dim // mq != int(cb_row.subdim):
-        raise ValueError(
-            f"{op}: subvector dim {dim // mq} != committed codebook"
-            f" subvector dim {int(cb_row.subdim)} (dim {dim}, m={mq})"
-        )
-    # ragged rows would mis-split in _pq_split; drop them like
-    # _pq_frame does
-    return q.where(F.size("_v") == dim), dim, mq
-
-
-def _ivfpq_commit_delta(q, cents, codebook, expected, id_col, vec_col):
-    """The IVF-PQ ingest delta — ONE definition shared by
-    `ivfpq_index_probe(commit=True)` and `ivfpq_index_ingest`, so the
-    pinned byte-identical-delta contract holds by construction
-    instead of by copy discipline: per deduped, dim-filtered batch id
-    the argmax committed cell AND the packed codes against the
-    committed codebook as one atomic posting row, stamped with the
-    XOR-combined content hash of BOTH verified committed models."""
-    batch_assign = (
-        _cell_scored(q, cents)
-        .groupBy("_id")
-        .agg(
-            F.max_by(
-                "cent_id",
-                F.struct(
-                    F.col("_cos").alias("c"),
-                    (-F.col("cent_id")).alias("nc"),
-                ),
-            ).alias("cell")
-        )
-        .select(F.col("_id").alias("vec_id"), "cell")
-    )
-    surv = q.select(
-        F.col("_id").alias(id_col), F.col("_v").alias(vec_col)
-    )
-    batch_codes = _pq_pack_codes(
-        pq_encode(surv, codebook, id_col=id_col, vec_col=vec_col),
-        id_col,
-    )
-    return (
-        batch_assign.join(batch_codes, "vec_id")
-        .withColumn("build_id", F.lit(int(expected)))
-        .withColumn("stamp_fmt", F.lit(_STAMP_FMT).cast("integer"))
-    )
-
-
 def ivfpq_index_ingest(batch, index_path, id_col="vec_id", vec_col="emb"):
     """Library operator: APPEND a batch to the committed IVF-PQ index
-    WITHOUT answering a query against it (round 18, VERDICT r17 item
-    2) — the pure-ingest sibling of ``ivfpq_index_probe(commit=True)``.
-    Each batch row is cell-assigned against the committed centroids
-    and encoded against the committed codebook, then the (vec_id,
-    cell, codes) rows land as the next postings delta — O(batch x
-    models) work, never a candidate scan of the index, which the
-    probe-then-commit path pays just to discard the answer on an
-    ingest-cadence workload. For every batch that commits at least
-    one row the delta is IDENTICAL to what
-    ``ivfpq_index_probe(batch, ..., commit=True)`` would commit
-    (shared `_ivfpq_commit_delta` definition; pinned in
+    WITHOUT answering a query against it (round 18) — the pure-ingest
+    sibling of ``ivfpq_index_probe(commit=True)``. Each batch row is
+    cell-assigned against the committed centroids and encoded against
+    the committed codebook, then the (vec_id, cell, codes) rows land
+    as the next postings delta — O(batch x models) work, never a
+    candidate scan of the index, which the probe-then-commit path
+    pays just to discard the answer on an ingest-cadence workload.
+    For every batch that commits at least one row the delta is
+    IDENTICAL to what ``ivfpq_index_probe(batch, ..., commit=True)``
+    would commit (one shared row definition; pinned in
     tests/test_ivfpq_index_api.py): the same up-front duplicate-id
     collapse, zero-norm drop, ragged-row drop, dim validation, argmax
     cell rule, and build stamp — latest-wins / tombstone semantics at
@@ -4869,72 +3951,10 @@ def ivfpq_index_ingest(batch, index_path, id_col="vec_id", vec_col="emb"):
     the zero-norm / ragged filters — is a no-op returning 0 where the
     probe path raises on an all-zero-norm batch. Before appending,
     the newest live log row's build stamp is verified against the
-    committed models (`_assert_log_stamp` — the O(1-row)
+    committed models (`assert_log_stamp` — the O(1-row)
     crashed-rebuild gate the probe-commit path also runs before ITS
     append). Returns the number of rows committed."""
-    from spark_data_test_spark.state import (
-        RETAIN_ALL,
-        read_state_table,
-        write_state_version,
-    )
-
-    spark = batch.sparkSession
-    cents_raw = read_state_table(spark, f"{index_path}/centroids")
-    codebook = read_state_table(spark, f"{index_path}/codebook")
-    if cents_raw is None or codebook is None:
-        raise ValueError(
-            f"ivfpq_index_ingest: no committed index at {index_path}"
-            " (run ivfpq_index_build first)"
-        )
-    if read_state_table(spark, f"{index_path}/postings") is None:
-        # models committed but no postings log: a build crashed between
-        # its commits — refuse to graft deltas onto half an index
-        raise ValueError(
-            f"ivfpq_index_ingest: index at {index_path} has models but"
-            " no committed postings (re-run ivfpq_index_build)"
-        )
-    cent_hash = _model_build_hash(cents_raw, ["cent_id", "cv", "cn2"])
-    cb_row = _pq_codebook_row(codebook)
-    expected = cent_hash ^ int(cb_row.bid)
-    _assert_log_stamp(
-        spark,
-        f"{index_path}/postings",
-        expected,
-        "ivfpq_index_ingest",
-        live=lambda part: part["cell"] >= 0,
-    )
-    d = _pq_dedup_ids(batch, id_col, vec_col).persist()
-    try:
-        # empty-batch no-op BEFORE the shape check (whose
-        # _norm_vectors raises on an empty frame)
-        if d.first() is None:
-            return 0
-        q, _, _ = _ivfpq_shape_checked(
-            d, cb_row, "ivfpq_index_ingest", id_col, vec_col
-        )
-        if q is None:
-            return 0  # every batch vector was zero-norm
-        cents = F.broadcast(
-            cents_raw.select(
-                "cent_id",
-                F.col("cv").alias("_cv"),
-                F.col("cn2").alias("_cn2"),
-            )
-        )
-        delta = _ivfpq_commit_delta(
-            q, cents, codebook, expected, id_col, vec_col
-        ).persist()
-        try:
-            n = delta.count()
-            if n:
-                write_state_version(
-                    delta, f"{index_path}/postings", retain=RETAIN_ALL
-                )
-        finally:
-            delta.unpersist()
-        return n
-    finally:
-        d.unpersist()
+    return _IVFPQ_POSTINGS.ingest(batch, index_path, id_col, vec_col)
 
 
 def ivfpq_index_delete(spark, index_path, ids, id_col="vec_id"):
@@ -4947,45 +3967,7 @@ def ivfpq_index_delete(spark, index_path, ids, id_col="vec_id"):
     reclaims. ``ids`` is an iterable of id values or a DataFrame
     whose ``id_col`` holds them. Returns the committed delta
     version."""
-    from pyspark.sql import DataFrame
-
-    from spark_data_test_spark.state import (
-        RETAIN_ALL,
-        read_state_table,
-        write_state_version,
-    )
-
-    base = read_state_table(spark, f"{index_path}/postings")
-    if base is None:
-        raise ValueError(
-            f"ivfpq_index_delete: no committed postings at {index_path}"
-            " (run ivfpq_index_build first)"
-        )
-    types = {f.name: f.dataType for f in base.schema.fields}
-    if "build_id" not in types:
-        raise ValueError(
-            f"ivfpq_index_delete: the log at {index_path} predates build"
-            f" stamping (committed by an earlier release) — re-run"
-            f" ivfpq_index_build to upgrade it before deleting"
-        )
-    if isinstance(ids, DataFrame):
-        idf = ids.select(F.col(id_col).alias("vec_id")).distinct()
-    else:
-        ids = list(ids)
-        if not ids:
-            raise ValueError("ivfpq_index_delete: empty id set")
-        idf = spark.createDataFrame([(i,) for i in ids], ["vec_id"]).distinct()
-    tomb = idf.select(
-        F.col("vec_id").cast(types["vec_id"]),
-        F.lit(_TOMBSTONE_CELL).cast(types["cell"]).alias("cell"),
-        F.lit(None).cast(types["codes"]).alias("codes"),
-        # tombstones carry no stamp: they never survive resolution
-        F.lit(None).cast(types["build_id"]).alias("build_id"),
-        F.lit(None).cast("integer").alias("stamp_fmt"),
-    )
-    return write_state_version(
-        tomb, f"{index_path}/postings", retain=RETAIN_ALL
-    )
+    return _IVFPQ_POSTINGS.delete(spark, index_path, ids, id_col)
 
 
 def ivfpq_index_compact(spark, index_path):
@@ -4993,14 +3975,7 @@ def ivfpq_index_compact(spark, index_path):
     resolved snapshot — the shared LSM compaction rule (newest commit
     per vec_id BEFORE committing, tombstone winners dropped). Returns
     the committed snapshot version, or None for a missing index."""
-    from spark_data_test_spark.state import write_state_version
-
-    resolved = _resolved_ivfpq_postings(spark, index_path)
-    if resolved is None:
-        return None
-    return write_state_version(
-        resolved, f"{index_path}/postings", retain=1
-    )
+    return _IVFPQ_POSTINGS.compact(spark, index_path)
 
 
 def ivfpq_index_stats(spark, index_path):
@@ -5018,76 +3993,17 @@ def ivfpq_index_stats(spark, index_path):
     stats MEASURE the damage without raising; a postings log missing
     either committed model reads out as ``model_hash`` NULL with
     ``n_stale`` = ``n_live``, plus ``m`` / ``n_code_rows`` NULL when
-    the codebook is the missing one — ADVICE r15: stats observe even
-    fully damaged indexes). All aggregates run distributed; one
-    summary row reaches the driver. Returns None for a missing
+    the codebook is the missing one). All aggregates run distributed;
+    one summary row reaches the driver. Returns None for a missing
     index."""
-    from spark_data_test_spark.state import (
-        read_state_table,
-        read_state_union,
-    )
-
-    log = read_state_union(
+    return _IVFPQ_POSTINGS.stats(
         spark,
-        f"{index_path}/postings",
-        version_col="_pv",
-        allow_missing_columns=True,
-    )
-    if log is None:
-        return None
-    cents = read_state_table(spark, f"{index_path}/centroids")
-    codebook = read_state_table(spark, f"{index_path}/codebook")
-    # a postings log without BOTH committed models is CORRUPTED state
-    # (the build commits models before log), but stats MEASURE damage,
-    # they never raise (ADVICE r15 — probes raise, stats observe): the
-    # readout comes back with model_hash NULL and n_stale = n_live,
-    # every live row unverifiable against the missing model(s).
-    if cents is None or codebook is None:
-        exp_lit = F.lit(None).cast("long")
-        stale = F.lit(True)
-    else:
-        expected = _model_build_hash(
-            cents, ["cent_id", "cv", "cn2"]
-        ) ^ _model_build_hash(codebook, ["s", "cent_id", "csub"])
-        exp_lit = F.lit(expected).cast("long")
-        stale = ~F.col("build_id").eqNullSafe(exp_lit)
-    per_cell = (
-        _resolved_ivfpq_postings(spark, index_path)
-        .groupBy("cell")
-        .agg(
-            F.count(F.lit(1)).alias("_n"),
-            F.sum(stale.cast("long")).alias("_st"),
-        )
-    )
-    cells = per_cell.agg(
-        F.coalesce(F.sum("_n"), F.lit(0)).cast("long").alias("n_live"),
-        F.count(F.lit(1)).alias("n_cells_used"),
-        F.coalesce(F.max("_n"), F.lit(0)).cast("long").alias(
-            "max_cell_rows"
-        ),
-        F.coalesce(F.sum("_st"), F.lit(0)).cast("long").alias("n_stale"),
-    )
-    raw = log.agg(
-        F.count(F.lit(1)).alias("n_log_rows"),
-        F.count_distinct("_pv").alias("n_versions"),
-        F.sum(
-            (F.col("cell") == F.lit(_TOMBSTONE_CELL)).cast("long")
-        ).alias("n_tombstones"),
-    )
-    if codebook is None:
-        model = spark.range(1).select(
-            F.lit(None).cast("long").alias("m"),
-            F.lit(None).cast("long").alias("n_code_rows"),
-        )
-    else:
-        model = codebook.agg(
-            (F.max("s") + 1).cast("long").alias("m"),
-            F.count(F.lit(1)).alias("n_code_rows"),
-        )
-    return (
-        cells.crossJoin(F.broadcast(raw))
-        .crossJoin(F.broadcast(model))
-        .select(
+        index_path,
+        lambda spark, resolved, stale, models: [
+            _cell_stats(resolved, stale),
+            _codebook_shape(spark, models[1]),
+        ],
+        [
             "n_live",
             "n_cells_used",
             "max_cell_rows",
@@ -5095,12 +4011,10 @@ def ivfpq_index_stats(spark, index_path):
             "n_code_rows",
             "n_log_rows",
             "n_versions",
-            F.coalesce("n_tombstones", F.lit(0)).cast("long").alias(
-                "n_tombstones"
-            ),
-            exp_lit.alias("model_hash"),
+            "n_tombstones",
+            "model_hash",
             "n_stale",
-        )
+        ],
     )
 
 
@@ -5163,8 +4077,8 @@ def refine_topk(
     # interleave two rows of one query in the same rank window —
     # collapse deterministically (greatest (norm, vector) pair), the
     # family rule
-    resolver = _pq_dedup_ids(resolver, id_col, vec_col)
-    queries = _pq_dedup_ids(queries, id_col, vec_col)
+    resolver = dedup_ids(resolver, id_col, vec_col)
+    queries = dedup_ids(queries, id_col, vec_col)
     if metric == "cosine":
         r = _norm_vectors(resolver, id_col, vec_col, "refine_topk")
         q = _norm_vectors(queries, id_col, vec_col, "refine_topk")

@@ -33,9 +33,10 @@ import time
 # is the space lever that folds a log back into one snapshot. A log
 # with UPDATE semantics (rows tagged via ``read_state_union``'s
 # ``version_col`` and resolved latest-wins) supports DELETES the LSM
-# way: commit a tombstone row the resolver recognizes (e.g. the IVF
-# postings' cell = -1, `ivf_index_delete`) and let the log's OWN
-# resolving compactor drop it physically — never the generic
+# way; every persisted index runs that lifecycle through
+# ``spark_data_test_spark.index_log``: `commit_tombstones` appends the
+# tombstone rows the resolver recognizes, and `commit_view` compacts by
+# committing the RESOLVED view — never the generic
 # ``compact_state_versions``, which would freeze superseded rows and
 # tombstones at one version and break the latest-wins read.
 RETAIN_ALL = sys.maxsize

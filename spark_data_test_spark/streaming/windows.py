@@ -1808,14 +1808,14 @@ def streaming_media_arrivals(spark, sf_dir):
     from spark_data_test_spark.operators.multimodal import (
         _aud_signed_expr,
         _audio_corpus,
+        _media_root,
         _stage_wav_files,
         decode_wav,
     )
     from spark_data_test_spark.utils.spark_utils import source_fingerprint
 
     prepare_session(spark)
-    digest = hashlib.md5(sf_dir.encode()).hexdigest()[:12]
-    root = f"/tmp/spark_graft_wav_arrivals/{digest}"
+    root = _media_root("wav_arrivals", sf_dir)
     src = f"{sf_dir}/documents.parquet"
     token = f"wavarr2|{src}|{source_fingerprint(src)}"
     marker = f"{root}/_STAGED"
@@ -1827,7 +1827,7 @@ def streaming_media_arrivals(spark, sf_dir):
     if stale:
         shutil.rmtree(root, ignore_errors=True)
         os.makedirs(root, exist_ok=True)
-        full = f"/tmp/spark_graft_wav/{digest}"
+        full = _media_root("wav", sf_dir)
         _stage_wav_files(spark, sf_dir, full)
         # the manifest is written DISTRIBUTED (no driver-side id list);
         # 4 files so the availableNow drain is a genuine multi-batch

@@ -191,16 +191,17 @@ def bucket_pairs(rows, key_cols, member_col, cap, out_a="m_a", out_b="m_b"):
     The caller must pass a CHEAP-TO-RESCAN ``rows`` frame (persisted,
     checkpointed, or a narrow projection of one): it is consumed three
     times (size pass, cold aggregate, hot join). NULL members never
-    pair (as in the self-join); a NULL bucket KEY forms a bucket
-    (groupBy semantics) but can never match the broadcast hot list, so
-    it always expands on the cold path — no engine site produces NULL
-    bucket keys (band sigs, shingles and grams are non-null by
-    construction; `market_basket` pre-filters), so pre-filter NULL
-    keys if a new caller can see them at degenerate sizes."""
+    pair (as in the self-join), and rows with a NULL in any bucket key
+    are dropped up front: the self-join's equi-join never pairs them,
+    while a groupBy would keep the NULL group as one bucket — which
+    could never match the broadcast hot list and so would expand on
+    the cold path at any size, past the cap."""
     keys = list(key_cols)
     cap = int(cap)
     if cap < 2:
         raise ValueError("bucket_pairs: cap must be >= 2")
+    for k in keys:
+        rows = rows.where(F.col(k).isNotNull())
     sizes = rows.groupBy(*keys).agg(F.count(F.lit(1)).alias("_n"))
     hot = sizes.where(F.col("_n") > cap).select(*keys)
     cold_pairs = (

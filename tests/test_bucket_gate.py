@@ -23,9 +23,10 @@ def _brute_pairs(spark, rows):
     buckets = {}
     for k, m in rows:
         buckets.setdefault(k, []).append(m)
-    # a NULL bucket key still forms a bucket (groupBy keeps the NULL
-    # group; the helper documents that it always takes the cold path);
-    # NULL members never pair (collect_set drops them, < is never true)
+    # a NULL bucket key never pairs (the self-join's equi-join drops
+    # it, and so does the helper); NULL members never pair (collect_set
+    # drops them, < is never true)
+    buckets.pop(None, None)
     for ms in buckets.values():
         ms = [m for m in ms if m is not None]
         for i in range(len(ms)):
@@ -48,7 +49,7 @@ def test_bucket_pairs_matches_bruteforce_across_the_gate(spark, cap):
     rows += [("overcap", m) for m in range(cap + 1)]
     rows += [("big", m) for m in range(3 * cap)]
     rows += [("withnull", 5), ("withnull", None), ("withnull", 7)]
-    rows += [(None, 100), (None, 101)]  # NULL bucket key: cold path
+    rows += [(None, 100), (None, 101)]  # NULL bucket key: never pairs
     df = spark.createDataFrame(rows, "k string, m long")
     got = sorted(
         tuple(r)
@@ -71,6 +72,20 @@ def test_bucket_pairs_degenerate_bucket_at_production_cap(spark):
     small = spark.range(3).select(F.lit("small").alias("k"), (F.col("id") + 10**6).alias("m"))
     out = bucket_pairs(big.unionByName(small), ("k",), "m", _BUCKET_CAP)
     assert out.count() == n * (n - 1) // 2 + 3
+
+
+@pytest.mark.parametrize("n_null", [2, 5])
+def test_bucket_pairs_null_keys_never_pair(spark, n_null):
+    """A NULL in any bucket key drops the row, on both sides of the
+    cap = 2 gate: a 2-member NULL bucket would expand in-task, a
+    5-member one would miss the broadcast hot list and bypass the
+    cap. Only the non-null control bucket pairs."""
+    rows = [(None, "x", m) for m in range(n_null)]
+    rows += [("a", None, m) for m in range(10, 10 + n_null)]
+    rows += [("a", "x", 20), ("a", "x", 21)]
+    df = spark.createDataFrame(rows, "k1 string, k2 string, m long")
+    got = [tuple(r) for r in bucket_pairs(df, ("k1", "k2"), "m", 2).collect()]
+    assert got == [(20, 21)]
 
 
 def test_bucket_cap_values_are_pinned():

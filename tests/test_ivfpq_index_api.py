@@ -867,8 +867,8 @@ def test_ivfpq_index_stats_reports_model_hash_and_staleness(spark, tmp_path):
     import pyspark.sql.functions as F
 
     from spark_data_test_spark import ivfpq_index_build, ivfpq_index_stats
-    from spark_data_test_spark.operators.similarity import (
-        _model_build_hash,
+    from spark_data_test_spark.index_log import (
+        model_build_hash as _model_build_hash,
     )
     from spark_data_test_spark.state import (
         read_state_table,
@@ -912,7 +912,7 @@ def test_ivfpq_commit_excludes_ragged_rows(spark, tmp_path):
 
     from spark_data_test_spark import ivfpq_index_build, ivfpq_index_probe
     from spark_data_test_spark.operators.similarity import (
-        _resolved_ivfpq_postings,
+        _IVFPQ_POSTINGS as _resolved_ivfpq_postings,
     )
 
     corpus = _mk(14, 8, 673)

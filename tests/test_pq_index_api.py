@@ -624,8 +624,8 @@ def test_pq_index_stats_reports_model_hash_and_staleness(spark, tmp_path):
     import pyspark.sql.functions as F
 
     from spark_data_test_spark import pq_index_build, pq_index_stats
-    from spark_data_test_spark.operators.similarity import (
-        _model_build_hash,
+    from spark_data_test_spark.index_log import (
+        model_build_hash as _model_build_hash,
     )
     from spark_data_test_spark.state import (
         read_state_table,
@@ -750,7 +750,7 @@ def test_pq_stamp_format_migration_diagnosed(spark, tmp_path):
     stamped under a foreign format with a non-matching build_id is
     exactly what a formula change leaves behind."""
     from spark_data_test_spark import pq_index_build, pq_index_probe
-    from spark_data_test_spark.operators.similarity import _STAMP_FMT
+    from spark_data_test_spark.index_log import STAMP_FMT as _STAMP_FMT
     from spark_data_test_spark.state import RETAIN_ALL, write_state_version
 
     corpus = _mk(16, 8, 409)
@@ -777,7 +777,7 @@ def test_pq_current_format_mismatch_still_reads_as_corruption(
     committed model is genuine crashed-rebuild state and keeps the
     'different build stamps' message."""
     from spark_data_test_spark import pq_index_build, pq_index_probe
-    from spark_data_test_spark.operators.similarity import _STAMP_FMT
+    from spark_data_test_spark.index_log import STAMP_FMT as _STAMP_FMT
     from spark_data_test_spark.state import RETAIN_ALL, write_state_version
 
     corpus = _mk(16, 8, 419)
@@ -866,11 +866,13 @@ def test_pq_and_ivfpq_resolved_rows_carry_current_stamp_format(
         pq_index_delete,
         pq_index_probe,
     )
+    from spark_data_test_spark.index_log import (
+        STAMP_FMT as _STAMP_FMT,
+        model_build_hash as _model_build_hash,
+    )
     from spark_data_test_spark.operators.similarity import (
-        _STAMP_FMT,
-        _model_build_hash,
-        _resolved_codes,
-        _resolved_ivfpq_postings,
+        _PQ_CODES as _resolved_codes,
+        _IVFPQ_POSTINGS as _resolved_ivfpq_postings,
     )
     from spark_data_test_spark.state import read_state_table
 

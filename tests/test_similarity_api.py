@@ -455,7 +455,7 @@ def test_ivf_index_probe_commit_dedupes_batch_ids(spark, tmp_path):
     disagree)."""
     from spark_data_test_spark import ivf_index_build, ivf_index_probe
     from spark_data_test_spark.operators.similarity import (
-        _resolved_postings,
+        _IVF_POSTINGS as _resolved_postings,
     )
 
     corpus, queries = _fixture(n=14, nq=3, dim=6, seed=71)
@@ -1105,8 +1105,8 @@ def test_ivf_index_stats_reports_model_hash_and_staleness(spark, tmp_path):
     import pyspark.sql.functions as F
 
     from spark_data_test_spark import ivf_index_build, ivf_index_stats
-    from spark_data_test_spark.operators.similarity import (
-        _model_build_hash,
+    from spark_data_test_spark.index_log import (
+        model_build_hash as _model_build_hash,
     )
     from spark_data_test_spark.state import (
         read_state_table,
@@ -1145,8 +1145,8 @@ def test_model_build_hash_counts_multiplicity(spark):
     an EMPTY one (both 0). The stamp now folds in the row count and a
     masked hash sum: duplicate-row corruption and empty models all
     hash distinctly."""
-    from spark_data_test_spark.operators.similarity import (
-        _model_build_hash,
+    from spark_data_test_spark.index_log import (
+        model_build_hash as _model_build_hash,
     )
 
     schema = "cent_id long, cv array<double>, cn2 double"
@@ -1182,7 +1182,7 @@ def test_ivf_probe_dedup_keeps_live_vector_over_zero_dup(spark, tmp_path):
     orders by (squared-norm, vector), so the live vector survives."""
     from spark_data_test_spark import ivf_index_build, ivf_index_probe
     from spark_data_test_spark.operators.similarity import (
-        _resolved_postings,
+        _IVF_POSTINGS as _resolved_postings,
     )
 
     corpus, _ = _fixture(n=14, nq=0, dim=6, seed=101)
@@ -1339,8 +1339,8 @@ def test_model_build_hash_property_sweep(spark):
     ADVICE-r15 corruption classes a bare xor misses)."""
     from hypothesis import HealthCheck, given, settings, strategies as st
 
-    from spark_data_test_spark.operators.similarity import (
-        _model_build_hash,
+    from spark_data_test_spark.index_log import (
+        model_build_hash as _model_build_hash,
     )
 
     schema = "cent_id long, cv array<double>, cn2 double"
@@ -1407,10 +1407,12 @@ def test_ivf_lifecycle_preserves_stamp_format_and_pins(spark, tmp_path):
         ivf_index_delete,
         ivf_index_probe,
     )
+    from spark_data_test_spark.index_log import (
+        STAMP_FMT as _STAMP_FMT,
+        model_build_hash as _model_build_hash,
+    )
     from spark_data_test_spark.operators.similarity import (
-        _STAMP_FMT,
-        _model_build_hash,
-        _resolved_postings,
+        _IVF_POSTINGS as _resolved_postings,
     )
     from spark_data_test_spark.state import read_state_table
 
